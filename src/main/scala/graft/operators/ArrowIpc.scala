@@ -21,8 +21,8 @@ package graft.operators
   *
   * Cross-validated in ArrowIpcSpec against the INDEPENDENT
   * arrow-vector implementation on Spark's classpath (fixtures are
-  * arrow-vector-WRITTEN — foreign-origin bytes, like the [[Bzip2]] and
-  * [[Xz]] tiers). Format is the public Apache Arrow columnar spec +
+  * arrow-vector-WRITTEN — foreign-origin bytes, like the
+  * [[ShardFixtures]]). Format is the public Apache Arrow columnar spec +
   * flatbuffers internals.
   */
 object ArrowIpc {

@@ -8,10 +8,10 @@ package graft.operators
   * encoding of records (zigzag LEB128 varints for int/long, length-
   * prefixed UTF-8 strings and bytes, little-endian IEEE float/double,
   * 1-byte booleans, union branch indexes), and both standard block
-  * codecs WIRED TO THIS REPO'S OWN DECODERS — `deflate` is raw RFC
-  * 1951 via [[Inflate.inflateRaw]], `snappy` is raw snappy via
-  * [[Snappy.uncompress]] plus Avro's trailing BIG-endian CRC-32 of the
-  * uncompressed block (verified).
+  * codecs through [[PageCodec.avroBlock]] — `deflate` is raw RFC 1951
+  * through the JDK `Inflater`, `snappy` is raw snappy through
+  * snappy-java plus Avro's trailing BIG-endian CRC-32 of the
+  * uncompressed block (verified with `java.util.zip.CRC32`).
   *
   * Schema scope, rejected loudly by name outside it: one top-level
   * record of primitive fields (null/boolean/int/long/float/double/
@@ -22,7 +22,7 @@ package graft.operators
   *
   * Cross-validated in AvroSpec against the INDEPENDENT avro-java
   * implementation on Spark's classpath: fixtures are avro-java-written
-  * (foreign-origin bytes, like the [[Bzip2]] tier), across all three
+  * (foreign-origin bytes, like the [[ShardFixtures]]), across all three
   * codecs, multi-block files, and every supported primitive; torn
   * files (bad magic, wrong sync, wrong block CRC, truncation) reject
   * loudly.
@@ -177,7 +177,7 @@ object Avro {
     val fields = parseSchema(schemaJson)
     val codec = meta.get("avro.codec").map(new String(_, "UTF-8"))
       .getOrElse("null")
-    require(codec == "null" || codec == "deflate" || codec == "snappy",
+    require(PageCodec.AvroCodecs(codec),
       s"avro codec '$codec' unsupported (null/deflate/snappy)")
     val sync = c.take(16)
     val rows = Vector.newBuilder[Seq[Any]]
@@ -189,28 +189,7 @@ object Avro {
       require(byteSize >= 0 && byteSize <= Int.MaxValue,
         s"torn avro: block size $byteSize")
       val raw = c.take(byteSize.toInt)
-      val data = codec match {
-        case "null" => raw
-        case "deflate" =>
-          // avro 'deflate' is RAW RFC 1951 — this repo's own inflater
-          val (out, end) = Inflate.inflateRaw(raw, 0)
-          require(end == raw.length,
-            "torn avro: deflate block has trailing garbage")
-          out
-        case _ =>
-          // avro 'snappy' appends a BIG-endian CRC-32 of the
-          // UNCOMPRESSED bytes to the raw-snappy payload
-          require(raw.length >= 4, "torn avro: snappy block under 4 bytes")
-          val out = Snappy.uncompress(raw, 0, raw.length - 4)
-          val want = ((raw(raw.length - 4) & 0xffL) << 24) |
-            ((raw(raw.length - 3) & 0xffL) << 16) |
-            ((raw(raw.length - 2) & 0xffL) << 8) |
-            (raw(raw.length - 1) & 0xffL)
-          val crc = new java.util.zip.CRC32()
-          crc.update(out)
-          require(crc.getValue == want, "avro snappy block CRC mismatch")
-          out
-      }
+      val data = PageCodec.avroBlock(codec, raw)
       val bc = new Cursor(data, 0)
       var i = 0L
       while (i < count) {

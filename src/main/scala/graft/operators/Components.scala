@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * ever reach the driver. Edges stay oriented big-id → small-id throughout,
   * so the fixpoint is exactly "every non-root points at its component min".
   */
-object Components {
+object Components extends org.apache.spark.internal.Logging {
 
   /** (id, comp) for every vertex appearing in `pairs`; comp = the smallest
     * vertex id reachable. Vertices only in self-pairs are singletons.
@@ -140,7 +140,7 @@ object Components {
         "star rounds — the edge set is still contracting and component " +
         "labels may be split"
       if (requireConvergence) throw new IllegalStateException(msg)
-      else System.err.println(s"[graft] WARN: $msg")
+      else logWarning(msg)
     }
     // at the star fixpoint every edge is (member, component-min); the min
     // re-aggregation only matters on an unconverged best-effort result

@@ -1,7 +1,10 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.attribute.FileTime
+import java.util.concurrent.{ScheduledThreadPoolExecutor, TimeUnit}
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,7 +19,7 @@ import org.apache.spark.sql.functions._
   * `add.stats.minValues` — so pipeline latency is measurable without wall
   * clocks (commit times are injected, SURVEY §5 determinism contract).
   */
-object Maintenance {
+object Maintenance extends Logging {
 
   // ---------------------------------------------------------------------
   // Optimistic single-table commit protocol — the engine analogue of the
@@ -55,27 +58,48 @@ object Maintenance {
       StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** The one daemon thread that renews the lease of every held commit
+    * lock; cancelled renewals leave its queue at once.
+    */
+  private lazy val leaseRenewer = {
+    val ex = new ScheduledThreadPoolExecutor(1, (r: Runnable) => {
+      val t = new Thread(r, "graft-commit-lease")
+      t.setDaemon(true)
+      t
+    })
+    ex.setRemoveOnCancelPolicy(true)
+    ex
+  }
+
   /** Run `body` holding the table's commit lock (sibling file, OUTSIDE the
     * table root so a directory swap never moves its own mutex).
-    * `Files.createFile` is the atomic create-if-absent CAS.
+    * Creating the file with CREATE_NEW is the atomic create-if-absent
+    * CAS; the file holds the holder's random token.
     *
     * Crash recovery: a holder that dies between create and delete would
     * wedge the table forever, so a lock whose mtime is older than
     * `staleLockMs` is treated as orphaned and broken (with a warning).
-    * The default 15 min exceeds any legitimate critical section — renames
-    * take milliseconds and even a lock-held final rewrite is bounded by
-    * the appender timeout.
+    * A live holder renews its lease — the lock's mtime — every quarter
+    * of `staleLockMs` while `body` runs, so however long a DML holds the
+    * lock it never looks stale; and release deletes the lock only while
+    * it still carries the holder's own token, so a holder whose lock was
+    * broken never deletes its successor's.
     */
   def withCommitLock[T](tablePath: String, timeoutMs: Long = 60000L,
       staleLockMs: Long = 900000L)(body: => T): T = {
     val lock = Paths.get(tablePath + "__graft_lock")
+    val token = java.util.UUID.randomUUID().toString
     // a fresh table's parent may not exist yet (commitAppend only
     // creates it as a staging side effect) — the lock must not care
     Option(lock.getParent).foreach(Files.createDirectories(_))
     val t0 = System.currentTimeMillis()
     var acquired = false
     while (!acquired) {
-      try { Files.createFile(lock); acquired = true }
+      try {
+        Files.writeString(lock, token, StandardOpenOption.CREATE_NEW,
+          StandardOpenOption.WRITE)
+        acquired = true
+      }
       catch { case _: java.nio.file.FileAlreadyExistsException =>
         val lf = lock.toFile
         // single mtime read, gated on > 0: lastModified() returns 0 for a
@@ -86,7 +110,7 @@ object Maintenance {
         val mtime = lf.lastModified()
         if (mtime > 0 &&
             System.currentTimeMillis() - mtime > staleLockMs) {
-          System.err.println(s"[graft] WARN: breaking stale commit lock " +
+          logWarning(s"breaking stale commit lock " +
             s"$lock (older than ${staleLockMs} ms — crashed holder)")
           Files.deleteIfExists(lock)
         } else if (System.currentTimeMillis() - t0 > timeoutMs)
@@ -95,7 +119,20 @@ object Maintenance {
         else Thread.sleep(5)
       }
     }
-    try body finally Files.deleteIfExists(lock)
+    def ours: Boolean =
+      try Files.readString(lock) == token
+      catch { case _: java.io.IOException => false }
+    val renewMs = math.max(staleLockMs / 4, 1L)
+    val lease = leaseRenewer.scheduleAtFixedRate(() =>
+      try {
+        if (ours) Files.setLastModifiedTime(lock,
+          FileTime.fromMillis(System.currentTimeMillis()))
+      } catch { case _: java.io.IOException => () },
+      renewMs, renewMs, TimeUnit.MILLISECONDS)
+    try body finally {
+      lease.cancel(false)
+      if (ours) Files.deleteIfExists(lock)
+    }
   }
 
   // ---------------------------------------------------------------------

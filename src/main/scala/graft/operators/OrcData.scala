@@ -20,8 +20,8 @@ package graft.operators
   * DECIMAL's unbounded zigzag varints + SECONDARY scale stream, and
   * BINARY. PRESENT streams reassemble nulls row-aligned; every
   * stream's chunk framing decompresses through
-  * [[OrcMeta.decompressStream]] and so through THIS REPO'S OWN
-  * Inflate/Snappy/Lz4/Zstd codecs. Legacy RLEv1 column encodings
+  * [[PageCodec.orcDecompress]] (the JDK inflater, snappy-java, lz4-java
+  * and zstd-jni). Legacy RLEv1 column encodings
   * (DIRECT/DICTIONARY without _V2) and nested types reject loudly by
   * name.
   *
@@ -164,7 +164,7 @@ object OrcData {
     val psr = parsePostscript(p)
     val psStart = p.length - 1 - (p(p.length - 1) & 0xff)
     val compression = psr.compression
-    val fb = OrcMeta.decompressStream(p, (psStart - psr.footerLen).toInt,
+    val fb = PageCodec.orcDecompress(p, (psStart - psr.footerLen).toInt,
       psr.footerLen.toInt, compression, psr.blockSize)
     parseFooter(fb, compression, psr.blockSize, psr.writerVersion)
   }
@@ -264,12 +264,12 @@ object OrcData {
       require(tailLen <= fileLen, s"torn ORC: $tailLen-byte tail " +
         s"declared in a $fileLen-byte file")
       val tail = readAt(fileLen - tailLen, tailLen.toInt)
-      val fb = OrcMeta.decompressStream(tail, psr.metadataLen.toInt,
+      val fb = PageCodec.orcDecompress(tail, psr.metadataLen.toInt,
         psr.footerLen.toInt, psr.compression, psr.blockSize)
       val meta = parseFooter(fb, psr.compression, psr.blockSize,
         psr.writerVersion)
       val stats = if (psr.metadataLen == 0) Nil else {
-        val mb = OrcMeta.decompressStream(tail, 0, psr.metadataLen.toInt,
+        val mb = PageCodec.orcDecompress(tail, 0, psr.metadataLen.toInt,
           psr.compression, psr.blockSize)
         parseMetadata(mb)
       }
@@ -462,7 +462,7 @@ object OrcData {
       case (s, o) if s.kind == K_ROW_INDEX && colIds.contains(s.column) =>
         require(o >= 0 && o + s.length <= buf.length,
           "torn ORC: index stream overruns the buffer")
-        s.column -> parseRowIndex(OrcMeta.decompressStream(buf,
+        s.column -> parseRowIndex(PageCodec.orcDecompress(buf,
           o.toInt, s.length.toInt, compression, blockSize))
     }.toMap
   }
@@ -476,7 +476,7 @@ object OrcData {
   def rowGroupStats(indexBytes: Array[Byte], footerBytes: Array[Byte],
       compression: Int, blockSize: Int, colIds: Seq[Int])
       : Map[Int, Seq[OrcColStat]] = {
-    val (streams, _) = parseStripeFooter(OrcMeta.decompressStream(
+    val (streams, _) = parseStripeFooter(PageCodec.orcDecompress(
       footerBytes, 0, footerBytes.length, compression, blockSize))
     // index streams lead the footer's list and the stripe's bytes, so
     // their offsets accumulate from 0 within the index area
@@ -485,7 +485,7 @@ object OrcData {
       case (s, o) if s.kind == K_ROW_INDEX && colIds.contains(s.column) =>
         require(o >= 0 && o + s.length <= indexBytes.length,
           "torn ORC: index stream overruns the index area")
-        s.column -> parseRowIndex(OrcMeta.decompressStream(indexBytes,
+        s.column -> parseRowIndex(PageCodec.orcDecompress(indexBytes,
           o.toInt, s.length.toInt, compression, blockSize)).map(_.stat)
     }.toMap
   }
@@ -547,14 +547,14 @@ object OrcData {
   def rowGroupBlooms(indexBytes: Array[Byte], footerBytes: Array[Byte],
       compression: Int, blockSize: Int, colIds: Seq[Int])
       : Map[Int, Seq[OrcBloom]] = {
-    val (streams, _) = parseStripeFooter(OrcMeta.decompressStream(
+    val (streams, _) = parseStripeFooter(PageCodec.orcDecompress(
       footerBytes, 0, footerBytes.length, compression, blockSize))
     val offsets = streams.scanLeft(0L)(_ + _.length).init
     streams.zip(offsets).collect {
       case (s, o) if s.kind == 8 && colIds.contains(s.column) =>
         require(o >= 0 && o + s.length <= indexBytes.length,
           "torn ORC: bloom stream overruns the index area")
-        s.column -> parseBloomIndex(OrcMeta.decompressStream(indexBytes,
+        s.column -> parseBloomIndex(PageCodec.orcDecompress(indexBytes,
           o.toInt, s.length.toInt, compression, blockSize))
     }.toMap
   }
@@ -1002,7 +1002,7 @@ object OrcData {
       stripe.dataLength
     require(off >= 0 && off + stripe.footerLength <= p.length,
       "torn ORC: stripe footer overruns the buffer")
-    parseStripeFooter(OrcMeta.decompressStream(p, off.toInt,
+    parseStripeFooter(PageCodec.orcDecompress(p, off.toInt,
       stripe.footerLength.toInt, compression, blockSize))
   }
 
@@ -1059,7 +1059,7 @@ object OrcData {
         case (s, o) if s.column == colId && s.kind == k =>
           require(o >= 0 && o + s.length <= p.length,
             "torn ORC: stream overruns the buffer")
-          OrcMeta.decompressStream(p, o.toInt, s.length.toInt,
+          PageCodec.orcDecompress(p, o.toInt, s.length.toInt,
             compression, blockSize)
       }
     val present = streamBytes(K_PRESENT).map(boolRle(_, rows))
@@ -1376,7 +1376,7 @@ object OrcData {
           val inner = cur.next()
           require(chunk >= 0 && chunk <= s.length,
             s"torn ORC: seek chunk $chunk past ${s.length}")
-          val d = OrcMeta.decompressStream(p, (o + chunk).toInt,
+          val d = PageCodec.orcDecompress(p, (o + chunk).toInt,
             (s.length - chunk).toInt, compression, blockSize)
           require(inner >= 0 && inner <= d.length,
             s"torn ORC: seek $inner into a ${d.length}-byte chunk")
@@ -1389,7 +1389,7 @@ object OrcData {
       findStream(k).map { case (s, o) =>
         require(o >= 0 && o + s.length <= p.length,
           "torn ORC: stream overruns the buffer")
-        OrcMeta.decompressStream(p, o.toInt, s.length.toInt,
+        PageCodec.orcDecompress(p, o.toInt, s.length.toInt,
           compression, blockSize)
       }
     def rleV2At(b: Array[Byte], n: Int, signed: Boolean): Array[Long] = {
@@ -1623,7 +1623,7 @@ object OrcData {
         case (s, o) if s.column == colId && s.kind == k =>
           require(o >= 0 && o + s.length <= p.length,
             "torn ORC: stream overruns the buffer")
-          OrcMeta.decompressStream(p, o.toInt, s.length.toInt,
+          PageCodec.orcDecompress(p, o.toInt, s.length.toInt,
             compression, blockSize)
       }
     def expand(present: Option[Array[Boolean]], vals: Array[Any])

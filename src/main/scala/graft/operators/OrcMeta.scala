@@ -6,10 +6,10 @@ package graft.operators
   * (PROTOBUF WIRE FORMAT from scratch — varint/64-bit/length-delimited/
   * 32-bit wire types, unknown fields skipped structurally — with the
   * field-8000 "ORC" magic), the compressed-stream chunk framing (3-byte
-  * little-endian headers carrying (length << 1) | isOriginal) routed
-  * through THIS REPO'S OWN codecs — ZLIB chunks are raw RFC 1951 via
-  * [[Inflate.inflateRaw]], SNAPPY chunks via [[Snappy.uncompress]] —
-  * and the Footer message down to per-column IntegerStatistics (sint64
+  * little-endian headers carrying (length << 1) | isOriginal) decoded
+  * through [[PageCodec.orcDecompress]] — ZLIB chunks as raw RFC 1951
+  * through the JDK `Inflater`, SNAPPY, LZ4 and ZSTD chunks through
+  * snappy-java, lz4-java and zstd-jni — and the Footer message down to per-column IntegerStatistics (sint64
   * ZIGZAG minimum/maximum/sum), stripe row counts, the type tree and
   * hasNull flags.
   *
@@ -18,7 +18,7 @@ package graft.operators
   * multi-GB file. Cross-validated in OrcMetaSpec against the
   * INDEPENDENT orc-core implementation on Spark-written files (which
   * Spark compresses with snappy by default, so the chunk framing and
-  * our snappy decoder run against real foreign bytes). Formats are the
+  * the snappy chunk path run against real foreign bytes). Formats are the
   * public ORC specification and the protobuf wire format.
   */
 object OrcMeta {
@@ -149,55 +149,6 @@ object OrcMeta {
     OrcType(kind, names.result())
   }
 
-  /** Decompress an ORC metadata stream: NONE passes through; ZLIB (raw
-    * deflate), SNAPPY, LZ4 and ZSTD chunks sit behind 3-byte LE headers
-    * of (chunkLength << 1) | isOriginal, each decoded by this repo's
-    * own codec — ZSTD chunks are complete RFC 8878 frames routed
-    * through [[Zstd.decode]] (Spark 4's DEFAULT ORC compression, the
-    * r13 seam this round closed). LZO rejects by name.
-    */
-  private[operators] def decompressStream(p: Array[Byte], off: Int, len: Int,
-      compression: Int, blockSize: Int): Array[Byte] = compression match {
-    case 0 => java.util.Arrays.copyOfRange(p, off, off + len)
-    case 1 | 2 | 4 | 5 =>
-      val out = new java.io.ByteArrayOutputStream()
-      var o = off
-      val end = off + len
-      while (o < end) {
-        require(o + 3 <= end, "torn ORC: compressed chunk header")
-        val h = (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8) |
-          ((p(o + 2) & 0xff) << 16)
-        o += 3
-        val original = (h & 1) != 0
-        val n = h >>> 1
-        require(o + n <= end, s"torn ORC: $n-byte chunk overruns")
-        if (original) out.write(p, o, n)
-        else compression match {
-          case 1 => // ZLIB = raw deflate
-            val (dec, _) = Inflate.inflateRaw(
-              java.util.Arrays.copyOfRange(p, o, o + n), 0)
-            out.write(dec, 0, dec.length)
-          case 2 =>
-            val dec = Snappy.uncompress(p, o, n)
-            out.write(dec, 0, dec.length)
-          case 5 =>
-            val dec = Zstd.decode(
-              java.util.Arrays.copyOfRange(p, o, o + n)).content
-            out.write(dec, 0, dec.length)
-          case _ => // LZ4 block, bounded by the declared block size
-            val dec = Lz4.decompressBlockUnknown(p, o, n,
-              math.max(blockSize, 1 << 18))
-            out.write(dec, 0, dec.length)
-        }
-        o += n
-      }
-      out.toByteArray
-    case 3 => throw new IllegalArgumentException(
-      "ORC compression kind 3 (LZO) unsupported")
-    case c => throw new IllegalArgumentException(
-      s"ORC compression kind $c unknown")
-  }
-
   def read(p: Array[Byte]): OrcTail = {
     require(p.length > 16, "torn ORC: shorter than any tail")
     val psLen = p(p.length - 1) & 0xff
@@ -223,7 +174,7 @@ object OrcMeta {
       s"torn ORC: footer length $footerLen")
     require(blockSize >= 0 && blockSize <= (1L << 26),
       s"torn ORC: compression block size $blockSize")
-    val fb = decompressStream(p, (psStart - footerLen).toInt,
+    val fb = PageCodec.orcDecompress(p, (psStart - footerLen).toInt,
       footerLen.toInt, compression, blockSize.toInt)
     val f = new PReader(fb, 0, fb.length)
     var numRows = -1L

@@ -44,8 +44,9 @@ package graft.operators
   *   - compression NONE (postscript kind 0, raw streams) or ZSTD
   *     (kind 5): every stream, stripe footer and file footer framed in
   *     the ORC chunk format — 3-byte LE `(len << 1) | isOriginal`
-  *     headers, bodies through THIS REPO'S OWN [[Zstd.compress]], raw
-  *     chunks where entropy coding cannot shrink the block.
+  *     headers, bodies zstd-jni frames through
+  *     [[PageCodec.orcCompress]], raw chunks where compression cannot
+  *     shrink the block.
   *
   * Validated the strong way in OrcWriteSpec: Spark's own orc-core
   * reader — the independent implementation — must read written files
@@ -1023,30 +1024,6 @@ object OrcWrite {
   private def preorderFields(fs: Seq[OwField]): Seq[OwField] =
     fs.flatMap(f => f +: preorderFields(f.children))
 
-  /** ORC chunk framing for one compressed section: 3-byte LE headers
-    * `(len << 1) | isOriginal`, bodies ≤ `blockSize`, each chunk a
-    * [[Zstd.compress]] frame unless raw is smaller.
-    */
-  private def frameZstd(b: Array[Byte], blockSize: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(b.length / 2 + 8)
-    var off = 0
-    while (off < b.length) {
-      val n = math.min(blockSize, b.length - off)
-      val packed = Zstd.compress(
-        java.util.Arrays.copyOfRange(b, off, off + n))
-      val (body, orig) =
-        if (packed.length < n) (packed, 0) else (null, 1)
-      val len = if (orig == 1) n else body.length
-      val hdr = (len << 1) | orig
-      out.write(hdr & 0xff); out.write((hdr >>> 8) & 0xff)
-      out.write((hdr >>> 16) & 0xff)
-      if (orig == 1) out.write(b, off, n)
-      else out.write(body, 0, body.length)
-      off += n
-    }
-    out.toByteArray
-  }
-
   /** Write one complete ORC file; returns the row count. `rows` yields
     * one `Array[Any]` per row aligned with `fields` (nulls as null;
     * BOOLEAN/INT/LONG/DOUBLE/STRING/DATE carried as
@@ -1055,16 +1032,18 @@ object OrcWrite {
     */
   def writeFile(path: java.nio.file.Path, fields: Seq[OwField],
       rows: Iterator[Array[Any]], stripeRows: Int = 1 << 16,
-      compression: Int = 0, rowIndexStride: Int = 10000,
+      compression: Int = PageCodec.Uncompressed,
+      rowIndexStride: Int = 10000,
       bloomColumns: Set[String] = Set.empty): Long = {
     require(fields.nonEmpty, "ORC writer needs at least one field")
     require(stripeRows > 0, s"bad stripe row count $stripeRows")
     require(rowIndexStride >= 0, s"bad row index stride $rowIndexStride")
-    require(compression == 0 || compression == 5,
+    require(compression == PageCodec.Uncompressed ||
+      compression == PageCodec.OrcZstd,
       s"ORC writer compression $compression unsupported (NONE=0, ZSTD=5)")
     val blockSize = 1 << 18
     def packed(b: Array[Byte]): Array[Byte] =
-      if (compression == 0) b else frameZstd(b, blockSize)
+      PageCodec.orcCompress(b, compression, blockSize)
     val os = new java.io.BufferedOutputStream(
       java.nio.file.Files.newOutputStream(path))
     var pos = 0L
@@ -1101,7 +1080,7 @@ object OrcWrite {
         // position is [compressed chunk offset, 0 into the chunk] and
         // a continuous read still sees one legal chunk chain.
         def framed(s: BuiltStream): BuiltStream =
-          if (compression == 0 || s.marks.isEmpty)
+          if (compression == PageCodec.Uncompressed || s.marks.isEmpty)
             s.copy(bytes = packed(s.bytes))
           else {
             val bounds = s.marks.map(_.head) :+ s.bytes.length.toLong
@@ -1110,9 +1089,8 @@ object OrcWrite {
             val newMarks = Seq.newBuilder[Seq[Long]]
             for (g <- s.marks.indices) {
               newMarks += Seq(out.size.toLong, 0L) ++ s.marks(g).tail
-              val seg = frameZstd(java.util.Arrays.copyOfRange(
-                s.bytes, bounds(g).toInt, bounds(g + 1).toInt),
-                blockSize)
+              val seg = packed(java.util.Arrays.copyOfRange(
+                s.bytes, bounds(g).toInt, bounds(g + 1).toInt))
               out.write(seg, 0, seg.length)
             }
             BuiltStream(s.kind, s.column, out.toByteArray,
@@ -1329,7 +1307,8 @@ object OrcWrite {
       val ps = new PB
       ps.uint(1, fob.length.toLong) // footerLength
       ps.uint(2, compression.toLong)
-      if (compression != 0) ps.uint(3, blockSize.toLong)
+      if (compression != PageCodec.Uncompressed)
+        ps.uint(3, blockSize.toLong)
       ps.msg(4) { m => // version [0, 12] — packed repeated uint32
         m.varint(0L); m.varint(12L)
       }
@@ -1380,7 +1359,8 @@ object OrcWrite {
     * `_SUCCESS` commits the directory. Returns the row count.
     */
   def writeDataFrame(df: org.apache.spark.sql.DataFrame, dir: String,
-      stripeRows: Int = 1 << 16, compression: Int = 0,
+      stripeRows: Int = 1 << 16,
+      compression: Int = PageCodec.Uncompressed,
       rowIndexStride: Int = 10000,
       bloomColumns: Set[String] = Set.empty): Long = {
     import org.apache.spark.sql.types._

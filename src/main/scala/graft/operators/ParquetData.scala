@@ -13,9 +13,9 @@ package graft.operators
   * values, DELTA_BINARY_PACKED ints (block/miniblock geometry, zigzag
   * first/min values, wrap-around Long arithmetic),
   * DELTA_LENGTH_BYTE_ARRAY and front-coded DELTA_BYTE_ARRAY strings —
-  * with page decompression routed through THIS REPO'S OWN codecs:
-  * SNAPPY → [[Snappy]], GZIP → [[Inflate]], ZSTD → [[Zstd]],
-  * LZ4_RAW → [[Lz4]]. Definition levels reassemble nulls row-aligned;
+  * with page decompression through [[PageCodec.parquetDecompress]]:
+  * SNAPPY → snappy-java, GZIP → the JDK inflater, ZSTD → zstd-jni,
+  * LZ4_RAW → lz4-java. Definition levels reassemble nulls row-aligned;
   * repetition levels feed [[assembleList]]'s 3-level LIST reassembly
   * (one nesting depth); BROTLI/LZO and the v1 LZ4-hadoop framing
   * reject loudly by name.
@@ -46,43 +46,6 @@ object ParquetData {
     * loudly (front-coding is defined over strings).
     */
   val RawByteArray: Int = -6
-
-  /** Decompress one page body per the chunk's codec id. */
-  private def decompress(p: Array[Byte], off: Int, len: Int, codec: Int,
-      uncompressedSize: Int): Array[Byte] = codec match {
-    case 0 => java.util.Arrays.copyOfRange(p, off, off + len)
-    case 1 =>
-      val out = Snappy.uncompress(p, off, len)
-      require(out.length == uncompressedSize,
-        s"snappy page inflated to ${out.length}, header said " +
-          s"$uncompressedSize")
-      out
-    case 2 =>
-      val out = Inflate.gunzip(
-        java.util.Arrays.copyOfRange(p, off, off + len))
-      require(out.length == uncompressedSize,
-        s"gzip page inflated to ${out.length}, header said " +
-          s"$uncompressedSize")
-      out
-    case 6 =>
-      val out = Zstd.decode(
-        java.util.Arrays.copyOfRange(p, off, off + len)).content
-      require(out.length == uncompressedSize,
-        s"zstd page inflated to ${out.length}, header said " +
-          s"$uncompressedSize")
-      out
-    case 7 => // LZ4_RAW: a single raw LZ4 block, no frame
-      Lz4.decompressBlock(p, off, len, uncompressedSize)
-    case 3 => throw new IllegalArgumentException(
-      "parquet codec 3 (LZO) unsupported")
-    case 4 => throw new IllegalArgumentException(
-      "parquet codec 4 (BROTLI) unsupported")
-    case 5 => throw new IllegalArgumentException(
-      "parquet codec 5 (LZ4 hadoop-framed, deprecated) unsupported — " +
-        "writers emit LZ4_RAW (7)")
-    case c => throw new IllegalArgumentException(
-      s"parquet codec $c unknown")
-  }
 
   /** Decode `n` values of the RLE / bit-packed hybrid encoding starting
     * at `start`; returns the next read position. Bit-packed groups padded
@@ -567,7 +530,7 @@ object ParquetData {
             s"dictionary page encoding ${h.encoding} unsupported")
           require(h.numValues <= (1 << 26),
             s"torn parquet: dictionary claims ${h.numValues} entries")
-          val data = decompress(file, bodyOff, h.compressedSize,
+          val data = PageCodec.parquetDecompress(file, bodyOff, h.compressedSize,
             col.codec, h.uncompressedSize)
           dict = readPlain(data, 0, data.length, physicalType,
             h.numValues, typeLength)._1
@@ -578,7 +541,7 @@ object ParquetData {
           dataPage += 1
         case 0 => // data page v1: [rep levels][def levels][values], one
           // compressed body; each level stream is 4-byte-length-prefixed
-          val data = decompress(file, bodyOff, h.compressedSize,
+          val data = PageCodec.parquetDecompress(file, bodyOff, h.compressedSize,
             col.codec, h.uncompressedSize)
           var d = 0
           def levelRegion(width: Int, out: Array[Int]): Unit = {
@@ -638,7 +601,7 @@ object ParquetData {
           val valOff = bodyOff + levLen
           val valLen = h.compressedSize - levLen
           val data =
-            if (h.isCompressed) decompress(file, valOff, valLen,
+            if (h.isCompressed) PageCodec.parquetDecompress(file, valOff, valLen,
               col.codec, h.uncompressedSize - levLen)
             else java.util.Arrays.copyOfRange(file, valOff,
               valOff + valLen)

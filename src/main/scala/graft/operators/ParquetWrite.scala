@@ -10,8 +10,8 @@ package graft.operators
   * enough to pay for it (parquet-mr's own policy shape: bounded
   * dictionary attempt, fall back to PLAIN past 64 Ki distinct or under
   * 2× repetition) — a PLAIN dictionary page + RLE_DICTIONARY index
-  * pages, page compression through THIS REPO'S OWN codecs
-  * ([[Snappy.compress]], [[Zstd.compress]], or UNCOMPRESSED),
+  * pages, page compression through [[PageCodec.parquetCompress]]
+  * (snappy-java, zstd-jni, or UNCOMPRESSED),
   * per-chunk Statistics (min_value/max_value/null_count, the modern
   * field ids), a PAGE-INDEX section (OffsetIndex per chunk,
   * ColumnIndex per stats-bearing chunk — parquet-mr's column-index
@@ -421,16 +421,6 @@ object ParquetWrite {
   private def cmpU(a: Array[Byte], b: Array[Byte]): Int =
     java.util.Arrays.compareUnsigned(a, b)
 
-  private def compressBody(body: Array[Byte], codec: Int)
-      : Array[Byte] = codec match {
-    case 0 => body
-    case 1 => Snappy.compress(body)
-    case 6 => Zstd.compress(body)
-    case c => throw new IllegalArgumentException(
-      s"parquet writer codec $c unsupported (UNCOMPRESSED=0, SNAPPY=1, " +
-        "ZSTD=6)")
-  }
-
   /** RLE_DICTIONARY value region of one data page: the index bit width
     * byte, then the RLE / bit-packed hybrid of the page's non-null
     * dictionary indices — one RLE run when the page is constant, one
@@ -512,7 +502,7 @@ object ParquetWrite {
     * String-or-Array[Byte]).
     */
   def writeFile(path: java.nio.file.Path, fields: Seq[PwField],
-      rows: Iterator[Array[Any]], codec: Int = 1,
+      rows: Iterator[Array[Any]], codec: Int = PageCodec.ParquetSnappy,
       rowGroupRows: Int = 1 << 20, pageRows: Int = 1 << 16,
       bloomColumns: Set[String] = Set.empty): Long =
     writeColumns(path, fields.map(PwLeafCol.apply), rows, codec,
@@ -524,7 +514,7 @@ object ParquetWrite {
     * level streams per the record-shredding model.
     */
   def writeColumns(path: java.nio.file.Path, cols: Seq[PwCol],
-      rows: Iterator[Array[Any]], codec: Int = 1,
+      rows: Iterator[Array[Any]], codec: Int = PageCodec.ParquetSnappy,
       rowGroupRows: Int = 1 << 20, pageRows: Int = 1 << 16,
       bloomColumns: Set[String] = Set.empty): Long = {
     val fields = cols
@@ -591,7 +581,7 @@ object ParquetWrite {
                 s"bloom filter on column '${f.name}': " +
                   s"${x.getClass.getName} values unsupported")
             }
-            Zstd.xxh64(bytes, 0, bytes.length, 0L)
+            PageCodec.xxh64(bytes, 0, bytes.length, 0L)
           }
           var r0 = 0
           while (r0 < nRows) {
@@ -658,7 +648,7 @@ object ParquetWrite {
               val e = it.next(); entries(e.getValue.intValue) = e.getKey
             }
             val raw = plainValues(f, entries, entries.length)
-            val packed = compressBody(raw, codec)
+            val packed = PageCodec.parquetCompress(raw, codec)
             val hdr = new Ba
             val w = new TWriter(hdr)
             w.structBegin()
@@ -710,7 +700,7 @@ object ParquetWrite {
               } else plainValues(f, pageVals, n)
             body.write(pv, 0, pv.length)
             val raw = body.toByteArray
-            val packed = compressBody(raw, codec)
+            val packed = PageCodec.parquetCompress(raw, codec)
             val hdr = new Ba
             val w = new TWriter(hdr)
             w.structBegin()
@@ -843,7 +833,7 @@ object ParquetWrite {
             val pv = plainValues(f, pageVals, nn)
             body.write(pv, 0, pv.length)
             val raw = body.toByteArray
-            val packed = compressBody(raw, codec)
+            val packed = PageCodec.parquetCompress(raw, codec)
             val hdr = new Ba
             val w = new TWriter(hdr)
             w.structBegin()
@@ -1522,7 +1512,7 @@ object ParquetWrite {
   }
 
   def writeDataFrame(df: org.apache.spark.sql.DataFrame, dir: String,
-      codec: Int = 1, rowGroupRows: Int = 1 << 20,
+      codec: Int = PageCodec.ParquetSnappy, rowGroupRows: Int = 1 << 20,
       pageRows: Int = 1 << 16,
       bloomColumns: Set[String] = Set.empty): Long = {
     import org.apache.spark.sql.types._

@@ -108,11 +108,15 @@ object Warc {
   // Deterministic fixture: a warcinfo record + N response records, ONE
   // GZIP MEMBER PER RECORD (the Common Crawl .warc.gz layout)
 
-  private[operators] def gzipMember(data: Array[Byte]): Array[Byte] = {
+  /** One gzip member: the 10-byte header (zero mtime, OS=255), FNAME
+    * when `name` is given, the JDK `Deflater` body, CRC-32 and ISIZE.
+    */
+  private[operators] def gzipMember(data: Array[Byte],
+      name: Option[String] = None): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    // 10-byte header: magic, deflate, no flags, zero mtime, OS=255
-    out.write(Array(0x1f, 0x8b, 8, 0, 0, 0, 0, 0, 0, 255)
-      .map(_.toByte), 0, 10)
+    out.write(Array(0x1f, 0x8b, 8, if (name.isDefined) 8 else 0, 0, 0, 0,
+      0, 0, 255).map(_.toByte), 0, 10)
+    name.foreach { n => out.write(n.getBytes("ISO-8859-1")); out.write(0) }
     val d = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
     d.setInput(data); d.finish()
     val buf = new Array[Byte](1 << 16)
@@ -159,5 +163,140 @@ object Warc {
         s"https://example.com/doc/$id/$i", httpResponse(status, payload)))
     }
     members.result().reduce(_ ++ _)
+  }
+}
+
+/** Closed-form compressed text shards, one per doc id, for the
+  * compressed-shard queries (s17–s20, s24, s26) and their specs. Each
+  * shard is written by the library Spark ships for its codec (lz4-java,
+  * snappy-java, the JDK `Deflater` through [[Warc.gzipMember]],
+  * commons-compress, tukaani, zstd-jni), so the decoders in
+  * [[PageCodec]] read foreign-origin bytes. The shapes rotate with the
+  * id; the DuckDB oracles rebuild every line from the same formulas.
+  */
+object ShardFixtures {
+
+  private def lines(ks: Range)(line: Int => String): Array[Byte] =
+    ks.map(line).mkString("", "\n", "\n").getBytes("UTF-8")
+
+  private def written(f: java.io.OutputStream => java.io.OutputStream)(
+      content: Array[Byte]): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val os = f(bos)
+    os.write(content)
+    os.close()
+    bos.toByteArray
+  }
+
+  /** .jsonl.lz4: block sizes 64 KiB..4 MiB rotating, block checksums on
+    * odd ids, the content size declared on id%3==0.
+    */
+  def lz4Content(id: Long): Array[Byte] =
+    lines(0 until 40 + (id % 30).toInt)(k =>
+      s"""{"doc":$id,"seq":$k,"host":"h${k % 7}.example.com","bytes":${
+        (k * 37 + id % 11) % 1000}}""")
+
+  def lz4(id: Long): Array[Byte] = {
+    import net.jpountz.lz4.LZ4FrameOutputStream.{BLOCKSIZE, FLG}
+    val content = lz4Content(id)
+    val bits = Seq(FLG.Bits.BLOCK_INDEPENDENCE, FLG.Bits.CONTENT_CHECKSUM) ++
+      (if (id % 2 == 1) Seq(FLG.Bits.BLOCK_CHECKSUM) else Nil) ++
+      (if (id % 3 == 0) Seq(FLG.Bits.CONTENT_SIZE) else Nil)
+    written(new net.jpountz.lz4.LZ4FrameOutputStream(_,
+      BLOCKSIZE.valueOf(4 + (id % 4).toInt),
+      if (id % 3 == 0) content.length.toLong else -1L, bits: _*))(content)
+  }
+
+  /** .tsv.sz: 512-byte chunks on id%3==2 (multi-chunk streams). */
+  def snappyContent(id: Long): Array[Byte] =
+    lines(0 until 50 + (id % 40).toInt)(k =>
+      s"$id\t$k\tlang${k % 5}\t${(k * 53 + id % 13) % 2000}")
+
+  def snappy(id: Long): Array[Byte] =
+    written(new org.xerial.snappy.SnappyFramedOutputStream(_,
+      if (id % 3 == 2) 512 else 65536, 0.85))(snappyContent(id))
+
+  /** .jsonl.gz: 2 + id%3 members (the pigz / .warc.gz shape), FNAME
+    * `shard-<id>-<m>.jsonl` on even members.
+    */
+  def gzipMemberCount(id: Long): Int = 2 + (id % 3).toInt
+
+  def gzipMemberContent(id: Long, m: Int): Array[Byte] =
+    lines(0 until 20 + ((id + m * 7) % 15).toInt)(k =>
+      s"""{"doc":$id,"member":$m,"seq":$k,"score":${
+        (k * 41 + m * 17 + id % 19) % 500}}""")
+
+  def gzip(id: Long): Array[Byte] =
+    (0 until gzipMemberCount(id)).map(m => Warc.gzipMember(
+      gzipMemberContent(id, m),
+      if (m % 2 == 0) Some(s"shard-$id-$m.jsonl") else None)).reduce(_ ++ _)
+
+  /** .jsonl.bz2 at the 100k block size; id%4==3 shards are two
+    * concatenated streams splitting the lines (the pbzip2 shape).
+    */
+  private def bzip2Line(id: Long)(k: Int): String =
+    s"""{"doc":$id,"seq":$k,"cat":"c${k % 6}","w":${
+      (k * 29 + id % 17) % 800}}"""
+
+  def bzip2Content(id: Long): Array[Byte] =
+    lines(0 until 60 + (id % 50).toInt)(bzip2Line(id))
+
+  def bzip2(id: Long): Array[Byte] = {
+    val one = written(new org.apache.commons.compress.compressors.bzip2
+      .BZip2CompressorOutputStream(_, 1)) _
+    val n = 60 + (id % 50).toInt
+    if (id % 4 == 3)
+      one(lines(0 until n / 2)(bzip2Line(id))) ++
+        one(lines(n / 2 until n)(bzip2Line(id)))
+    else one(bzip2Content(id))
+  }
+
+  /** .jsonl.xz: presets 0/3/6/9 rotating (hash-chain to BT4 match
+    * finders), check type CRC64 / CRC32 / SHA-256 by id%3, a 64 KiB
+    * dictionary (the payload is ~4 KiB).
+    */
+  def xzContent(id: Long): Array[Byte] =
+    lines(0 until 45 + (id % 40).toInt)(k =>
+      s"""{"doc":$id,"seq":$k,"tag":"t${k % 8}","v":${
+        (k * 43 + id % 23) % 900}}""")
+
+  def xz(id: Long): Array[Byte] = {
+    val opts =
+      new org.tukaani.xz.LZMA2Options(Array(0, 3, 6, 9)((id % 4).toInt))
+    opts.setDictSize(1 << 16)
+    val check = Array(org.tukaani.xz.XZ.CHECK_CRC64,
+      org.tukaani.xz.XZ.CHECK_CRC32, org.tukaani.xz.XZ.CHECK_SHA256)(
+      (id % 3).toInt)
+    written(new org.tukaani.xz.XZOutputStream(_, opts, check))(xzContent(id))
+  }
+
+  /** .jsonl.zst: levels 1/3/6/12/19 rotating through the match-finder
+    * classes, content checksums on even ids; id%4==3 shards are a
+    * skippable-frame leader plus two frames splitting the lines (the
+    * pzstd / seekable shape).
+    */
+  private def zstdLine(id: Long)(k: Int): String =
+    s"""{"doc":$id,"seq":$k,"lab":"z${k % 9}","x":${
+      (k * 47 + id % 21) % 1200}}"""
+
+  def zstdContent(id: Long): Array[Byte] =
+    lines(0 until 70 + (id % 60).toInt)(zstdLine(id))
+
+  def zstd(id: Long): Array[Byte] = {
+    def one(content: Array[Byte]): Array[Byte] = {
+      val ctx = new com.github.luben.zstd.ZstdCompressCtx()
+      try {
+        ctx.setLevel(Array(1, 3, 6, 12, 19)((id % 5).toInt))
+        ctx.setChecksum(id % 2 == 0)
+        ctx.compress(content)
+      } finally ctx.close()
+    }
+    val n = 70 + (id % 60).toInt
+    if (id % 4 == 3) {
+      val meta = s"shard-$id".getBytes("UTF-8")
+      Array[Byte](0x50, 0x2a, 0x4d, 0x18, meta.length.toByte, 0, 0, 0) ++
+        meta ++ one(lines(0 until n / 2)(zstdLine(id))) ++
+        one(lines(n / 2 until n)(zstdLine(id)))
+    } else one(zstdContent(id))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables.t
-import graft.operators.Maintenance
+import graft.operators.{Maintenance, PageCodec, ShardFixtures}
 
 /** Remaining source/scan operators — SURVEY.md §2.1: S4 in-memory fixture
   * ingest (the REST/pandas path), S7 CSV scan, S8 commit-log scan.
@@ -404,14 +404,14 @@ object Sources {
       |FROM mem GROUP BY doc_id, n ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------------
-  // S17: LZ4-framed shard ingestion (operators.Lz4) — the compressed
-  // text-shard shape (.jsonl.lz4) a training corpus ships in, next to
-  // the archive family. The frame decode (from-scratch LZ4 block +
-  // frame + xxHash32, cross-validated both directions against lz4-java
-  // in Lz4Spec) runs per task in mapPartitions — one shard per task,
-  // no shuffle until the per-shard lines aggregate; the JSON lines then
-  // flow through Spark's native from_json + hash aggregate, so the
-  // Spark side of the pipeline is declarative and codegen'd. Oracle
+  // S17: LZ4-framed shard ingestion (PageCodec.lz4Frames) — the
+  // compressed text-shard shape (.jsonl.lz4) a training corpus ships
+  // in, next to the archive family. The frame decode (lz4-java's
+  // LZ4FrameInputStream, header/block/content xxHash32 checksums
+  // verified; Lz4Spec) runs per task in mapPartitions — one shard per
+  // task, no shuffle until the per-shard lines aggregate; the JSON
+  // lines then flow through Spark's native from_json + hash aggregate,
+  // so the Spark side of the pipeline is declarative and codegen'd. Oracle
   // reconstructs every line STRING in SQL and recomputes counts, the
   // parsed bytes field, distinct hosts, and the exact uncompressed
   // byte total — a decode slip of any kind changes one of them.
@@ -419,12 +419,10 @@ object Sources {
     import s.implicits._
     docIds(s, dir)
       .mapPartitions(_.flatMap { id =>
-        val info = graft.operators.Lz4.decodeFrame(
-          graft.operators.Lz4.fixturePayload(id))
-        val text = new String(info.content,
-          java.nio.charset.StandardCharsets.UTF_8)
-        text.split("\n").iterator
-          .map(l => (id, info.content.length.toLong, l))
+        val content = PageCodec.lz4Frames(ShardFixtures.lz4(id))
+        new String(content, java.nio.charset.StandardCharsets.UTF_8)
+          .split("\n").iterator
+          .map(l => (id, content.length.toLong, l))
       })
       .toDF("doc_id", "shard_bytes", "line")
       .select(col("doc_id"), col("shard_bytes"),
@@ -457,24 +455,22 @@ object Sources {
       |FROM lines GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------------
-  // S18: snappy-framed shard ingestion (operators.Snappy) — the second
-  // compressed-shard codec (.tsv.sz) next to s17's LZ4, decoded by the
-  // from-scratch raw+framed Snappy implementation (cross-validated both
-  // directions against snappy-java in SnappySpec, chunk CRC-32C masks
-  // verified). Same scale contract: one shard per task in
-  // mapPartitions, then Spark-native split + hash aggregate. Oracle
-  // reconstructs every TSV row string in SQL (chr(9) tabs) and
+  // S18: snappy-framed shard ingestion (PageCodec.snappyFramed) — the
+  // second compressed-shard codec (.tsv.sz) next to s17's LZ4, decoded
+  // by snappy-java's SnappyFramedInputStream (every chunk's masked
+  // CRC-32C verified; SnappySpec). Same scale contract: one shard per
+  // task in mapPartitions, then Spark-native split + hash aggregate.
+  // Oracle reconstructs every TSV row string in SQL (chr(9) tabs) and
   // recomputes row counts, the token-field sum, distinct langs, and
   // the exact uncompressed byte total.
   private def s18SnappyIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     docIds(s, dir)
       .mapPartitions(_.flatMap { id =>
-        val info = graft.operators.Snappy.decodeFramed(
-          graft.operators.Snappy.fixturePayload(id))
-        new String(info.content, java.nio.charset.StandardCharsets.UTF_8)
+        val content = PageCodec.snappyFramed(ShardFixtures.snappy(id))
+        new String(content, java.nio.charset.StandardCharsets.UTF_8)
           .split("\n").iterator
-          .map(r => (id, info.content.length.toLong, r))
+          .map(r => (id, content.length.toLong, r))
       })
       .toDF("doc_id", "shard_bytes", "row")
       .select(col("doc_id"), col("shard_bytes"),
@@ -504,12 +500,12 @@ object Sources {
       |FROM tsv GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------------
-  // S19: multi-member gzip shard ingestion (operators.Inflate) — the
-  // .jsonl.gz / pigz / .warc.gz member-per-chunk shape decoded by the
-  // FROM-SCRATCH RFC 1951/1952 inflater (all three block types, full
-  // optional-header grammar, CRC-32/ISIZE/FHCRC verified; JDK
-  // cross-validated both directions in InflateSpec) instead of the
-  // JDK's GZIPInputStream the other gzip consumers use. Same per-task
+  // S19: multi-member gzip shard ingestion (PageCodec.gzipMembers) —
+  // the .jsonl.gz / pigz / .warc.gz member-per-chunk shape: the RFC
+  // 1952 member headers are parsed (FNAME kept, FHCRC verified), each
+  // body inflates through the JDK Inflater, whose remaining input
+  // marks the member end, and every member's CRC-32 and ISIZE are
+  // verified with java.util.zip.CRC32 (InflateSpec). Same per-task
   // scale contract; the member fan-out keeps doc-level constants
   // (member count, byte total, first member name) computed once in the
   // task, so the aggregate can't double-count them.
@@ -517,8 +513,7 @@ object Sources {
     import s.implicits._
     docIds(s, dir)
       .mapPartitions(_.flatMap { id =>
-        val members = graft.operators.Inflate.gunzipMembers(
-          graft.operators.Inflate.fixturePayload(id))
+        val members = PageCodec.gzipMembers(ShardFixtures.gzip(id))
         val total = members.map(_.content.length.toLong).sum
         val first = members.head.name.getOrElse("")
         members.iterator.flatMap { m =>
@@ -567,25 +562,21 @@ object Sources {
       |FROM lines GROUP BY doc_id, nm ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------------
-  // S20: bzip2 shard ingestion (operators.Bzip2) — the wiki-dump /
-  // archive-corpus shape (.jsonl.bz2), decoded by the FROM-SCRATCH
-  // block-sorting decoder (Huffman groups + selectors, MTF, RUNA/RUNB
-  // runs, inverse BWT, RLE1, per-block and combined CRCs verified;
-  // commons-compress cross-validated in Bzip2Spec). The fixture corpus
-  // is commons-compress-PRODUCED, so the decode under measurement runs
-  // against foreign-origin bytes; id%4==3 shards are two concatenated
-  // streams (the pbzip2 shape). Same per-task scale contract as
-  // s17-s19.
+  // S20: bzip2 shard ingestion (PageCodec.bzip2Streams) — the
+  // wiki-dump / archive-corpus shape (.jsonl.bz2), decoded stream by
+  // stream by commons-compress (per-block and combined stream CRCs
+  // verified; Bzip2Spec), whose compressed count is each stream's
+  // exact length, so n_streams counts the pbzip2 concatenation the
+  // id%4==3 shards carry. Same per-task scale contract as s17-s19.
   private def s20Bzip2Ingest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     docIds(s, dir)
       .mapPartitions(_.flatMap { id =>
-        val info = graft.operators.Bzip2.decode(
-          graft.operators.Bzip2.fixturePayload(id))
-        new String(info.content, java.nio.charset.StandardCharsets.UTF_8)
+        val (content, streams) =
+          PageCodec.bzip2Streams(ShardFixtures.bzip2(id))
+        new String(content, java.nio.charset.StandardCharsets.UTF_8)
           .split("\n").iterator
-          .map(l => (id, info.nStreams.toLong,
-            info.content.length.toLong, l))
+          .map(l => (id, streams.toLong, content.length.toLong, l))
       })
       .toDF("doc_id", "n_streams", "total_bytes", "line")
       .select(col("doc_id"), col("n_streams"), col("total_bytes"),
@@ -623,8 +614,8 @@ object Sources {
   // ---------------------------------------------------------------------
   // S21: Avro OCF shard ingestion (operators.Avro) — the Kafka-dump /
   // data-lake row format, decoded by the from-scratch OCF reader whose
-  // deflate/snappy block codecs route through this repo's OWN
-  // Inflate/Snappy decoders (avro-java cross-validated in AvroSpec;
+  // deflate/snappy block codecs route through PageCodec.avroBlock (the
+  // JDK inflater and snappy-java; avro-java cross-validated in AvroSpec;
   // the fixture corpus is avro-java-WRITTEN, foreign-origin). The
   // `quarters` field is an exact multiple of 0.25, so scaling by 4
   // yields exact integers in both engines — no float comparison.
@@ -727,18 +718,17 @@ object Sources {
   // ---------------------------------------------------------------------
   // S23: ORC tail scan (operators.OrcMeta) — the second columnar
   // format's metadata read from scratch (protobuf wire format,
-  // postscript, ZSTD-framed footer chunks through this repo's OWN
-  // RFC 8878 decoder, operators.Zstd), answering row counts and column
+  // postscript, ZSTD-framed footer chunks through zstd-jni behind
+  // PageCodec.orcDecompress), answering row counts and column
   // ranges from KBs of tail per file; the oracle re-derives every fact
   // by full scan of the parquet-side events table (the ORC fixture is
   // a lossless round-trip of it). orc-core cross-validation lives in
   // OrcMetaSpec.
   /** Build-once zstd-compressed ORC fixture — Spark 4's DEFAULT ORC
-    * codec, pinned explicitly so the query exercises the from-scratch
-    * zstd path even if the session default drifts (r13 pinned snappy
-    * here because zstd was still a documented seam; r14's decoder
-    * closed it). The directory name carries the codec so a cached
-    * snappy-era fixture can never satisfy this build.
+    * codec, pinned explicitly so the query exercises the zstd chunk
+    * path even if the session default drifts. The directory name
+    * carries the codec so a cached snappy-era fixture can never
+    * satisfy this build.
     */
   def ensureOrcMetaFixture(s: SparkSession, dir: String): String = {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"),
@@ -762,7 +752,8 @@ object Sources {
       .mapPartitions(_.map { path =>
         val t = graft.operators.OrcMeta.readFile(
           java.nio.file.Paths.get(path))
-        require(t.compression == 5, "fixture must be zstd-framed")
+        require(t.compression == PageCodec.OrcZstd,
+          "fixture must be zstd-framed")
         val ev = t.columns(1).intStats.get // event_id
         val us = t.columns(2).intStats.get // user_id
         (t.numberOfRows, ev.min.get, ev.max.get, ev.sum.get,
@@ -787,24 +778,20 @@ object Sources {
       |FROM events""".stripMargin
 
   // ---------------------------------------------------------------------
-  // S24: xz shard ingestion (operators.Xz) — the highest-ratio
-  // compressed-shard codec (.jsonl.xz), decoded by the from-scratch
-  // XZ/LZMA2 implementation (adaptive range coder — no predefined
-  // tables anywhere — with block checks, index and footer verified;
-  // tukaani cross-validated at every preset in XzSpec). The fixture
-  // corpus is tukaani-WRITTEN (foreign-origin bytes) with preset and
-  // check type rotating per id. Same per-task scale contract as the
-  // rest of the compressed-shard family.
+  // S24: xz shard ingestion (PageCodec.xz) — the highest-ratio
+  // compressed-shard codec (.jsonl.xz), decoded by tukaani's
+  // XZInputStream (block checks, index and footer verified; XzSpec);
+  // check_type is the low nibble of stream-header byte 7. The fixture
+  // corpus rotates preset and check type per id. Same per-task scale
+  // contract as the rest of the compressed-shard family.
   private def s24XzIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     docIds(s, dir)
       .mapPartitions(_.flatMap { id =>
-        val info = graft.operators.Xz.decode(
-          graft.operators.Xz.fixturePayload(id))
-        new String(info.content, java.nio.charset.StandardCharsets.UTF_8)
+        val (content, checkType) = PageCodec.xz(ShardFixtures.xz(id))
+        new String(content, java.nio.charset.StandardCharsets.UTF_8)
           .split("\n").iterator
-          .map(l => (id, info.checkType.toLong,
-            info.content.length.toLong, l))
+          .map(l => (id, checkType.toLong, content.length.toLong, l))
       })
       .toDF("doc_id", "check_type", "total_bytes", "line")
       .select(col("doc_id"), col("check_type"), col("total_bytes"),
@@ -899,13 +886,11 @@ object Sources {
       |FROM rows_ GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------------
-  // S26: zstd shard ingestion (operators.Zstd) — the dominant modern
-  // lake/shard codec (.jsonl.zst), decoded by the from-scratch RFC 8878
-  // implementation (FSE/tANS with the spec's predefined distributions,
-  // Huffman literals with FSE-compressed weights, repeat offsets,
-  // XXH64 content checksums verified; zstd-jni cross-validated at
-  // every level class in ZstdSpec). The fixture corpus is
-  // zstd-jni-WRITTEN (foreign-origin bytes) with the level rotating
+  // S26: zstd shard ingestion (PageCodec.zstdFrames) — the dominant
+  // modern lake/shard codec (.jsonl.zst), decoded frame by frame by
+  // zstd-jni (XXH64 content checksums verified; ZstdSpec). The walk
+  // steps with libzstd's findFrameCompressedSize and skips skippable
+  // frames, so n_frames counts data frames. The fixture level rotates
   // through the fast/default/lazy/btopt match-finder classes; id%4==3
   // shards carry a skippable-frame leader plus two concatenated frames
   // (the pzstd/seekable shape) and id%2==0 frames carry checksums.
@@ -914,12 +899,10 @@ object Sources {
     import s.implicits._
     docIds(s, dir)
       .mapPartitions(_.flatMap { id =>
-        val info = graft.operators.Zstd.decode(
-          graft.operators.Zstd.fixturePayload(id))
-        new String(info.content, java.nio.charset.StandardCharsets.UTF_8)
+        val (content, frames) = PageCodec.zstdFrames(ShardFixtures.zstd(id))
+        new String(content, java.nio.charset.StandardCharsets.UTF_8)
           .split("\n").iterator
-          .map(l => (id, info.nFrames.toLong,
-            info.content.length.toLong, l))
+          .map(l => (id, frames.toLong, content.length.toLong, l))
       })
       .toDF("doc_id", "n_frames", "total_bytes", "line")
       .select(col("doc_id"), col("n_frames"), col("total_bytes"),
@@ -959,15 +942,15 @@ object Sources {
   // (s22): thrift PageHeader walk, dictionary + v1 data pages, the
   // RLE/bit-packed hybrid definition levels and index streams, PLAIN
   // longs/doubles and dictionary-encoded strings, ZSTD page
-  // decompression through this repo's own RFC 8878 decoder — then the
+  // decompression through zstd-jni behind PageCodec — then the
   // recovered rows flow through Spark-native groupBy/agg. The oracle
   // full-scans the same events data on the parquet side in DuckDB, so
   // a slipped level, wrong dictionary index, misaligned null, or
   // byte-order bug in any page fails the value compare. Same fan-out
   // contract as s22/s23: one FILE per task.
   /** Build-once zstd-compressed parquet fixture (explicitly pinned so
-    * the page path exercises the from-scratch zstd decoder regardless
-    * of the session default); 2 files so the file fan-out is real.
+    * the page path exercises the zstd page codec regardless of the
+    * session default); 2 files so the file fan-out is real.
     */
   def ensureParquetDataFixture(s: SparkSession, dir: String): String = {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"),

@@ -28,8 +28,8 @@ import graft.operators.OrcData.{OrcColStat, OrcStripe, OrcTypeNode}
   * planned entirely from the from-scratch readers — schema and stripe
   * directory from [[OrcData.readPlan]] (postscript + footer + Metadata
   * tail IO only, never a data byte), stripes decoded by
-  * [[OrcData.readStripeRows]] through this repo's own
-  * Inflate/Snappy/Lz4/Zstd chunk codecs. The same three planning
+  * [[OrcData.readStripeRows]] through the [[PageCodec]] chunk codecs
+  * (the JDK inflater, snappy-java, lz4-java, zstd-jni). The same three planning
   * levers the built-in ORC source gets from orc-core are re-derived:
   *
   *  - '''column pruning''' ([[SupportsPushDownRequiredColumns]]): only

@@ -30,8 +30,8 @@ import graft.operators.ParquetFooter.{PqColumn, PqSchemaField}
   * DataSource V2, planned entirely from the from-scratch readers:
   * schema inference and row-group planning from [[ParquetFooter]]
   * (footer-tail IO only, never a data byte), pages decoded by
-  * [[ParquetData]] through this repo's own
-  * Snappy/Inflate/Zstd/Lz4 codecs. The scan-planning surface Spark's
+  * [[ParquetData]] through the [[PageCodec]] page codecs
+  * (snappy-java, the JDK inflater, zstd-jni, lz4-java). The scan-planning surface Spark's
   * built-in parquet source gets from parquet-mr is re-derived here:
   *
   *  - '''column pruning''' ([[SupportsPushDownRequiredColumns]]): only
@@ -2257,11 +2257,11 @@ private[sources] class GraftSingleFileWriter(dir: java.io.File,
       if (orc)
         graft.operators.OrcWrite.writeFile(tmp.toPath,
           graft.operators.OrcWrite.fieldsOf(fileSchema), it,
-          compression = 5)
+          compression = graft.operators.PageCodec.OrcZstd)
       else
         graft.operators.ParquetWrite.writeColumns(tmp.toPath,
           graft.operators.ParquetWrite.columnsOf(fileSchema), it,
-          codec = 1)
+          codec = graft.operators.PageCodec.ParquetSnappy)
     } catch {
       case t: Throwable =>
         failure = t
@@ -3281,7 +3281,7 @@ private[sources] class GraftParquetScan(fullSchema: StructType,
           s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         case _ => return None
       }
-      Some(graft.operators.Zstd.xxh64(bytes, 0, bytes.length, 0L))
+      Some(graft.operators.PageCodec.xxh64(bytes, 0, bytes.length, 0L))
     }
     def might(c: String, v: Any): Boolean = (for {
       col <- cols.find(_.path == c)

@@ -22,7 +22,7 @@ import org.apache.spark.sql.DataFrame
   *     if unset the helper logs once and falls back to localCheckpoint
   *     rather than failing mid-iteration.
   */
-object IterCheckpoint {
+object IterCheckpoint extends org.apache.spark.internal.Logging {
 
   @volatile private var warnedNoDir = false
   @volatile private var warnedBadFlag = false
@@ -44,7 +44,7 @@ object IterCheckpoint {
     if (!rawReliable.equalsIgnoreCase("true") &&
         !rawReliable.equalsIgnoreCase("false") && !warnedBadFlag) {
       warnedBadFlag = true
-      System.err.println("[graft] spark.graft.graph.reliableCheckpoint=" +
+      logWarning("spark.graft.graph.reliableCheckpoint=" +
         s"'$rawReliable' is not a boolean; treating as false " +
         "(reliable checkpointing DISABLED)")
     }
@@ -58,7 +58,7 @@ object IterCheckpoint {
       else if (s.sparkContext.getCheckpointDir.isEmpty) {
         if (!warnedNoDir) {
           warnedNoDir = true
-          System.err.println("[graft] reliableCheckpoint=true but no " +
+          logWarning("reliableCheckpoint=true but no " +
             "checkpoint dir is set (SparkContext.setCheckpointDir); " +
             "falling back to localCheckpoint")
         }

@@ -8,7 +8,7 @@ import graft.operators.Avro
   * INDEPENDENT avro-java implementation: foreign-origin fixtures across
   * all three codecs and multi-block files, every supported primitive,
   * and loud torn-file rejects. The deflate/snappy block codecs route
-  * through this repo's own Inflate/Snappy decoders.
+  * through PageCodec.avroBlock (the JDK inflater and snappy-java).
   */
 class AvroSpec extends AnyFunSuite {
 

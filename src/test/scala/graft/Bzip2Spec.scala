@@ -2,13 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Bzip2
+import graft.operators.{PageCodec, ShardFixtures}
 
-/** bzip2 decode (operators.Bzip2), cross-validated against the
-  * INDEPENDENT commons-compress implementation on Spark's classpath:
-  * our decoder must reproduce its compressor bit-exactly across block
+/** bzip2 shards through [[PageCodec.bzip2Streams]] (commons-compress
+  * underneath, one stream at a time): content bit-exact across block
   * sizes, data shapes (zero-run-heavy, random, text), multi-block and
-  * multi-stream files; torn streams reject loudly by name.
+  * multi-stream files, the stream count the walk reports, and loud
+  * torn-stream rejects.
   */
 class Bzip2Spec extends AnyFunSuite {
 
@@ -38,60 +38,58 @@ class Bzip2Spec extends AnyFunSuite {
       ("multiblock", Array.tabulate[Byte](350000)(i =>
         ((i / 13) % 251).toByte)))
     for ((name, src) <- shapes; level <- Seq(1, 9)) {
-      val packed = ccCompress(src, level)
-      val info = Bzip2.decode(packed)
-      assert(info.content.sameElements(src), s"$name level=$level")
-      assert(info.level == level && info.nStreams == 1)
-      // blocks hold 100k of POST-RLE1 data, so the 13-byte runs shrink
-      // ~2.3x before blocking: 350k in -> 2 blocks at level 1
-      if (name == "multiblock" && level == 1)
-        assert(info.nBlocks >= 2, s"expected multi-block, got ${info.nBlocks}")
+      val (content, streams) = PageCodec.bzip2Streams(ccCompress(src, level))
+      assert(content.sameElements(src), s"$name level=$level")
+      assert(streams == 1)
     }
   }
 
   test("multi-stream concatenation decodes like pbzip2 output") {
     val a = "first stream\n".getBytes("UTF-8")
     val b = "second stream\n".getBytes("UTF-8")
-    val cat = ccCompress(a, 1) ++ ccCompress(b, 1)
-    val info = Bzip2.decode(cat)
-    assert(info.content.sameElements(a ++ b))
-    assert(info.nStreams == 2)
+    // zero padding between streams (tar-style) is skipped
+    val cat = ccCompress(a, 1) ++ ccCompress(b, 9) ++ Array[Byte](0, 0) ++
+      ccCompress(a, 5)
+    val (content, streams) = PageCodec.bzip2Streams(cat)
+    assert(content.sameElements(a ++ b ++ a))
+    assert(streams == 3)
   }
 
   test("fixture family decodes to the closed form") {
     for (id <- 0L until 24L) {
-      val info = Bzip2.decode(Bzip2.fixturePayload(id))
-      assert(info.content.sameElements(Bzip2.fixtureContent(id)),
+      val (content, streams) = PageCodec.bzip2Streams(ShardFixtures.bzip2(id))
+      assert(content.sameElements(ShardFixtures.bzip2Content(id)),
         s"id=$id content")
-      assert((info.nStreams == 2) == (id % 4 == 3), s"id=$id streams")
-      val lines = new String(info.content, "UTF-8").split("\n")
-      assert(lines.length == Bzip2.fixtureLineCount(id))
-      assert(lines(0) == Bzip2.fixtureLine(id, 0))
+      assert(streams == (if (id % 4 == 3) 2 else 1), s"id=$id streams")
+      val lines = new String(content, "UTF-8").split("\n")
+      assert(lines.length == 60 + id % 50)
+      assert(lines(0) == s"""{"doc":$id,"seq":0,"cat":"c0","w":${id % 17}}""")
     }
   }
 
   test("torn streams reject loudly by name") {
-    val good = Bzip2.fixturePayload(1L)
-    val notBz = intercept[IllegalArgumentException](
-      Bzip2.decode("BZx1 not actually bzip2 data".getBytes("US-ASCII")))
-    assert(notBz.getMessage.contains("BZh"), notBz.getMessage)
+    val good = ShardFixtures.bzip2(1L)
+    val notBz = intercept[IllegalArgumentException](PageCodec.bzip2Streams(
+      "BZx1 not actually bzip2 data".getBytes("US-ASCII")))
+    assert(notBz.getMessage.contains("bzip2"), notBz.getMessage)
     val badLevel = good.clone()
     badLevel(3) = '0'
-    val e0 = intercept[IllegalArgumentException](Bzip2.decode(badLevel))
-    assert(e0.getMessage.contains("level"), e0.getMessage)
+    val e0 = intercept[IllegalArgumentException](
+      PageCodec.bzip2Streams(badLevel))
+    assert(e0.getMessage.contains("bzip2"), e0.getMessage)
     // flip a payload bit mid-block: the block CRC (or an upstream
     // structural check) must catch it
     var caught = 0
     for (i <- good.length / 3 until good.length / 3 + 20) {
       val bad = good.clone()
       bad(i) = (bad(i) ^ 0x10).toByte
-      try { Bzip2.decode(bad) } catch {
+      try { PageCodec.bzip2Streams(bad) } catch {
         case _: IllegalArgumentException => caught += 1
       }
     }
     assert(caught > 0, "no mid-block corruption was ever detected")
     // truncation
     intercept[IllegalArgumentException](
-      Bzip2.decode(good.take(good.length / 2)))
+      PageCodec.bzip2Streams(good.take(good.length / 2)))
   }
 }

@@ -2,15 +2,19 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Corruption-robustness contract across EVERY from-scratch decoder:
-  * a seeded mutation of a valid fixture (single-byte XORs, truncations,
-  * double flips) must either decode or reject LOUDLY — an
-  * IllegalArgument/IllegalState exception from our guards, or an
+/** Corruption-robustness contract across every decoder entry point —
+  * the engine's own format readers and the [[graft.operators.PageCodec]]
+  * seam over the codec jars: a seeded mutation of a valid fixture
+  * (single-byte XORs, truncations, double flips) must either decode or
+  * reject LOUDLY — an IllegalArgument/IllegalState exception from our
+  * guards (PageCodec maps every jar failure to one), or an
   * IOException/DataFormatException from a JDK-backed inner layer. What
   * is FORBIDDEN is the quiet-crash class: index/size/NPE/arithmetic
   * errors, stack overflows, or giant allocations (the scale guards cap
-  * raster dims), any of which would take down an executor instead of
-  * failing one record. 170 mutations per format, deterministic seed.
+  * raster dims and codec output sizes), any of which would take down an
+  * executor instead of failing one record. Parquet and ORC files the
+  * engine itself wrote (snappy pages, zstd chunks) are fuzzed next to
+  * the Spark-written ones. 170 mutations per format, deterministic seed.
   */
 class DecoderFuzzSpec extends AnyFunSuite {
 
@@ -41,14 +45,14 @@ class DecoderFuzzSpec extends AnyFunSuite {
         b => mm.Exif.parse(b)),
       ("id3", (0L until 6L).map(mm.Id3.fixturePayload),
         b => mm.Id3.parse(b)),
-      ("lz4", (0L until 6L).map(op.Lz4.fixturePayload),
-        b => op.Lz4.decodeFrame(b)),
-      ("snappy", (0L until 6L).map(op.Snappy.fixturePayload),
-        b => op.Snappy.decodeFramed(b)),
-      ("gzip", (0L until 6L).map(op.Inflate.fixturePayload),
-        b => op.Inflate.gunzipMembers(b)),
-      ("bzip2", (0L until 4L).map(op.Bzip2.fixturePayload),
-        b => op.Bzip2.decode(b)),
+      ("lz4", (0L until 6L).map(op.ShardFixtures.lz4),
+        b => op.PageCodec.lz4Frames(b)),
+      ("snappy", (0L until 6L).map(op.ShardFixtures.snappy),
+        b => op.PageCodec.snappyFramed(b)),
+      ("gzip", (0L until 6L).map(op.ShardFixtures.gzip),
+        b => op.PageCodec.gzipMembers(b)),
+      ("bzip2", (0L until 4L).map(op.ShardFixtures.bzip2),
+        b => op.PageCodec.bzip2Streams(b)),
       ("tar", (0L until 6L).map(op.Tar.fixturePayload),
         b => op.Tar.parse(b)),
       ("zip", (0L until 6L).map(op.Zip.fixturePayload),
@@ -57,10 +61,10 @@ class DecoderFuzzSpec extends AnyFunSuite {
         b => op.Warc.parse(b)),
       ("avro", (0L until 6L).map(op.Avro.fixturePayload),
         b => op.Avro.decode(b)),
-      ("xz", (0L until 6L).map(op.Xz.fixturePayload),
-        b => op.Xz.decode(b)),
-      ("zstd", (0L until 6L).map(op.Zstd.fixturePayload),
-        b => op.Zstd.decode(b)),
+      ("xz", (0L until 6L).map(op.ShardFixtures.xz),
+        b => op.PageCodec.xz(b)),
+      ("zstd", (0L until 6L).map(op.ShardFixtures.zstd),
+        b => op.PageCodec.zstdFrames(b)),
       ("arrow", (0L until 4L).map(op.ArrowIpc.fixturePayload),
         b => op.ArrowIpc.decode(b)),
       ("parquet-footer", Seq(java.nio.file.Files.readAllBytes(
@@ -106,7 +110,26 @@ class DecoderFuzzSpec extends AnyFunSuite {
         val f = new java.io.File(dir).listFiles()
           .filter(_.getName.endsWith(".orc")).head
         Seq(java.nio.file.Files.readAllBytes(f.toPath))
-      }, b => op.OrcData.readRows(b, Seq("a", "b", "c", "d")).length))
+      }, b => op.OrcData.readRows(b, Seq("a", "b", "c", "d")).length),
+      ("graftpq-write", {
+        val f = java.nio.file.Files.createTempFile("graft-fuzz-pqw", ".parquet")
+        op.ParquetWrite.writeFile(f, Seq(op.ParquetWrite.PwFields.int64("a"),
+          op.ParquetWrite.PwFields.string("b")),
+          (0 until 300).iterator.map(i => Array[Any](Long.box(i.toLong),
+            if (i % 7 == 0) null else s"y${i % 9}")),
+          codec = op.PageCodec.ParquetSnappy, rowGroupRows = 200,
+          pageRows = 50)
+        Seq(java.nio.file.Files.readAllBytes(f))
+      }, b => op.ParquetData.readRows(b, Seq("a", "b")).length),
+      ("graftorc-write", {
+        val f = java.nio.file.Files.createTempFile("graft-fuzz-orcw", ".orc")
+        op.OrcWrite.writeFile(f, Seq(op.OrcWrite.OwFields.long("a"),
+          op.OrcWrite.OwFields.string("b")),
+          (0 until 300).iterator.map(i => Array[Any](Long.box(i.toLong),
+            if (i % 7 == 0) null else s"y${i % 9}")),
+          stripeRows = 200, compression = op.PageCodec.OrcZstd)
+        Seq(java.nio.file.Files.readAllBytes(f))
+      }, b => op.OrcData.readRows(b, Seq("a", "b")).length))
 
   private def loud(t: Throwable): Boolean = t match {
     case _: IllegalArgumentException => true

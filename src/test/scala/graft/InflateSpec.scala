@@ -2,20 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Inflate
+import graft.operators.{PageCodec, ShardFixtures}
 
-/** DEFLATE/gzip/zlib decode (operators.Inflate), cross-validated
-  * against the JDK's independent java.util.zip in both directions:
-  * our inflater over Deflater output at every level (stored, fixed and
-  * dynamic blocks), the JDK inflater over our stored/fixed writers,
-  * checksum parity, the multi-member gzip fixture contract, and loud
-  * torn-stream rejects.
+/** DEFLATE and gzip through the [[PageCodec]] seam (the JDK `Inflater`
+  * underneath): raw deflate at every level as Avro blocks and ORC ZLIB
+  * chunks, the gzip member parser over JDK-written and full-header
+  * members, the multi-member fixture contract, loud torn-stream rejects
+  * and the output ceilings.
   */
 class InflateSpec extends AnyFunSuite {
 
-  private def jdkDeflate(src: Array[Byte], level: Int,
-      nowrap: Boolean): Array[Byte] = {
-    val d = new java.util.zip.Deflater(level, nowrap)
+  private def jdkDeflate(src: Array[Byte], level: Int): Array[Byte] = {
+    val d = new java.util.zip.Deflater(level, true)
     d.setInput(src); d.finish()
     val out = new java.io.ByteArrayOutputStream()
     val buf = new Array[Byte](8192)
@@ -24,16 +22,34 @@ class InflateSpec extends AnyFunSuite {
     out.toByteArray
   }
 
-  private def jdkInflateRaw(src: Array[Byte], dstLen: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(true)
-    inf.setInput(src)
-    val dst = new Array[Byte](dstLen)
-    var got = 0
-    while (got < dstLen && !inf.finished())
-      got += inf.inflate(dst, got, dstLen - got)
-    inf.end()
-    assert(got == dstLen)
-    dst
+  private def orcChunk(body: Array[Byte]): Array[Byte] = {
+    val h = body.length << 1
+    Array(h, h >>> 8, h >>> 16).map(_.toByte) ++ body
+  }
+
+  private def gunzip(p: Array[Byte]): Array[Byte] =
+    PageCodec.gzipMembers(p).flatMap(_.content.toSeq).toArray
+
+  /** A gzip member with every optional header field: FEXTRA, FNAME,
+    * FCOMMENT and the FHCRC over the header.
+    */
+  private def fullHeaderMember(content: Array[Byte]): Array[Byte] = {
+    val h = new java.io.ByteArrayOutputStream()
+    h.write(Array[Byte](0x1f, 0x8b.toByte, 8, (4 | 8 | 16 | 2).toByte,
+      0, 0, 0, 0, 0, 0xff.toByte))
+    h.write(Array[Byte](2, 0, 9, 9)) // XLEN 2 + FEXTRA bytes
+    h.write("a.jsonl".getBytes("ISO-8859-1")); h.write(0)
+    h.write("hello".getBytes("ISO-8859-1")); h.write(0)
+    val crc = new java.util.zip.CRC32()
+    crc.update(h.toByteArray)
+    h.write((crc.getValue & 0xff).toInt)
+    h.write(((crc.getValue >> 8) & 0xff).toInt)
+    val body = new java.util.zip.CRC32()
+    body.update(content)
+    def le32(v: Long): Array[Byte] = Array.tabulate[Byte](4)(i =>
+      ((v >>> (8 * i)) & 0xff).toByte)
+    h.toByteArray ++ jdkDeflate(content, 9) ++ le32(body.getValue) ++
+      le32(content.length.toLong)
   }
 
   test("our inflater decodes JDK Deflater output at every level " +
@@ -48,97 +64,64 @@ class InflateSpec extends AnyFunSuite {
           if ((i / 1000) % 2 == 0) ((i / 3) % 11).toByte
           else rnd.nextInt().toByte)
       }
-      val packed = jdkDeflate(src, level, nowrap = true)
-      val (dec, after) = Inflate.inflateRaw(packed, 0)
-      assert(dec.sameElements(src), s"level=$level shape=$shape")
-      assert(after == packed.length, s"level=$level end position")
+      val packed = jdkDeflate(src, level)
+      // an Avro deflate block must end exactly where the stream does
+      assert(PageCodec.avroBlock("deflate", packed).sameElements(src),
+        s"level=$level shape=$shape")
+      assert(PageCodec.orcDecompress(orcChunk(packed), 0,
+        packed.length + 3, 1, 1 << 16).sameElements(src),
+        s"level=$level shape=$shape ORC chunk")
     }
     // empty and tiny inputs
     for (n <- Seq(0, 1, 5); level <- Seq(0, 6)) {
       val src = Array.tabulate[Byte](n)(_.toByte)
-      val (dec, _) = Inflate.inflateRaw(jdkDeflate(src, level, true), 0)
-      assert(dec.sameElements(src), s"n=$n level=$level")
+      assert(PageCodec.avroBlock("deflate", jdkDeflate(src, level))
+        .sameElements(src), s"n=$n level=$level")
     }
-  }
-
-  test("the JDK inflater accepts our stored and fixed-Huffman writers") {
-    val rnd = new scala.util.Random(29)
-    for (n <- Seq(0, 1, 100, 65535, 70000, 200000)) {
-      val src = Array.tabulate[Byte](n)(i =>
-        (((i / 7) * 13 + rnd.nextInt(2)) % 41).toByte)
-      val stored = Inflate.deflateStored(src)
-      assert(jdkInflateRaw(stored, n).sameElements(src), s"stored n=$n")
-      val fixed = Inflate.deflateFixed(src)
-      assert(jdkInflateRaw(fixed, n).sameElements(src), s"fixed n=$n")
-      // and our own decoder agrees with both writers
-      assert(Inflate.inflateRaw(stored, 0)._1.sameElements(src))
-      assert(Inflate.inflateRaw(fixed, 0)._1.sameElements(src))
-    }
-  }
-
-  test("zlib streams decode with Adler-32 verified; adler parity with " +
-      "the JDK") {
-    val rnd = new scala.util.Random(31)
-    val src = Array.tabulate[Byte](120000)(i => ((i / 9) % 23).toByte)
-    for (level <- Seq(0, 1, 6, 9)) {
-      val z = jdkDeflate(src, level, nowrap = false)
-      assert(Inflate.zlibDecode(z).sameElements(src), s"zlib level=$level")
-    }
-    for (len <- Seq(0, 1, 100, 5000, 65521, 100000)) {
-      val b = Array.fill[Byte](len)(rnd.nextInt().toByte)
-      val jdk = new java.util.zip.Adler32()
-      jdk.update(b)
-      assert(Inflate.adler32(b, 0, len) == jdk.getValue.toInt, s"len=$len")
-    }
-    // a wrong trailer rejects
-    val z = jdkDeflate(src, 6, nowrap = false)
-    val bad = z.clone()
-    bad(bad.length - 1) = (bad(bad.length - 1) ^ 1).toByte
-    val e = intercept[IllegalArgumentException](Inflate.zlibDecode(bad))
-    assert(e.getMessage.contains("Adler"), e.getMessage)
   }
 
   test("gzip: JDK-written streams decode; our full-header members " +
       "decode in the JDK; fields recovered") {
     val content = Array.tabulate[Byte](90000)(i => ((i / 11) % 31).toByte)
-    // JDK writer -> our decoder
+    // JDK writer -> our member parser, and as a parquet GZIP page
     val bos = new java.io.ByteArrayOutputStream()
     val gz = new java.util.zip.GZIPOutputStream(bos)
     gz.write(content); gz.close()
-    assert(Inflate.gunzip(bos.toByteArray).sameElements(content))
-    // our writer (all optional fields) -> JDK reader
-    val ours = Inflate.gzipMember(content, name = Some("a.jsonl"),
-      comment = Some("hello"), extra = Some(Array[Byte](9, 9)),
-      headerCrc = true, level = 9)
+    val jdk = bos.toByteArray
+    assert(gunzip(jdk).sameElements(content))
+    assert(PageCodec.parquetDecompress(jdk, 0, jdk.length, 2,
+      content.length).sameElements(content))
+    // a member with every optional field -> JDK reader and our parser
+    val ours = fullHeaderMember(content)
     val gis = new java.util.zip.GZIPInputStream(
       new java.io.ByteArrayInputStream(ours))
-    val back = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    var n = gis.read(buf)
-    while (n >= 0) { back.write(buf, 0, n); n = gis.read(buf) }
+    assert(gis.readAllBytes().sameElements(content), "ours -> JDK gzip")
     gis.close()
-    assert(back.toByteArray.sameElements(content), "ours -> JDK gzip")
-    // and our decoder recovers the header fields
-    val m = Inflate.gunzipMembers(ours)
+    val m = PageCodec.gzipMembers(ours)
     assert(m.length == 1 && m.head.name.contains("a.jsonl") &&
-      m.head.comment.contains("hello") &&
-      m.head.extra.exists(_.sameElements(Array[Byte](9, 9))))
+      m.head.content.sameElements(content))
+    // the fixture writer's FNAME members read back in the JDK
+    val fixture = ShardFixtures.gzip(4L)
+    val all = new java.util.zip.GZIPInputStream(
+      new java.io.ByteArrayInputStream(fixture))
+    assert(all.readAllBytes().sameElements(gunzip(fixture)))
+    all.close()
   }
 
   test("multi-member fixture decodes to the closed form") {
     for (id <- 0L until 24L) {
-      val members = Inflate.gunzipMembers(Inflate.fixturePayload(id))
-      assert(members.length == Inflate.fixtureMemberCount(id), s"id=$id")
+      val members = PageCodec.gzipMembers(ShardFixtures.gzip(id))
+      assert(members.length == ShardFixtures.gzipMemberCount(id), s"id=$id")
       members.zipWithIndex.foreach { case (m, i) =>
-        assert(m.content.sameElements(Inflate.fixtureMemberContent(id, i)),
+        assert(m.content.sameElements(ShardFixtures.gzipMemberContent(id, i)),
           s"id=$id member $i content")
-        assert(m.name.isDefined == (i % 2 == 0), s"id=$id member $i name")
-        assert(m.comment.isDefined == (i % 2 == 1), s"id=$id comment")
+        assert(m.name == (if (i % 2 == 0) Some(s"shard-$id-$i.jsonl")
+          else None), s"id=$id member $i name")
       }
       // whole-shard concatenation equals member concatenation
-      val whole = Inflate.gunzip(Inflate.fixturePayload(id))
-      val want = (0 until Inflate.fixtureMemberCount(id))
-        .flatMap(i => Inflate.fixtureMemberContent(id, i).toSeq).toArray
+      val whole = gunzip(ShardFixtures.gzip(id))
+      val want = (0 until ShardFixtures.gzipMemberCount(id))
+        .flatMap(i => ShardFixtures.gzipMemberContent(id, i).toSeq).toArray
       assert(whole.sameElements(want), s"id=$id gunzip concat")
     }
   }
@@ -146,56 +129,64 @@ class InflateSpec extends AnyFunSuite {
   test("torn streams reject loudly by name") {
     // reserved block type 3
     val e0 = intercept[IllegalArgumentException](
-      Inflate.inflateRaw(Array[Byte](0x07, 0, 0), 0))
-    assert(e0.getMessage.contains("reserved"), e0.getMessage)
+      PageCodec.avroBlock("deflate", Array[Byte](0x07, 0, 0)))
+    assert(e0.getMessage.contains("avro deflate block"), e0.getMessage)
     // LEN/NLEN mismatch in a stored block
-    val stored = Inflate.deflateStored("hello world".getBytes("US-ASCII"))
+    val stored = jdkDeflate("hello world".getBytes("US-ASCII"), 0)
     val badLen = stored.clone()
     badLen(3) = (badLen(3) ^ 0x01).toByte
     val e1 = intercept[IllegalArgumentException](
-      Inflate.inflateRaw(badLen, 0))
-    assert(e1.getMessage.contains("LEN/NLEN"), e1.getMessage)
-    // gzip payload corruption -> CRC32 catches it
-    val good = Inflate.fixturePayload(2L)
+      PageCodec.avroBlock("deflate", badLen))
+    assert(e1.getMessage.contains("stored block lengths"), e1.getMessage)
+    // trailing bytes after the deflate stream
+    intercept[IllegalArgumentException](
+      PageCodec.avroBlock("deflate", stored ++ Array[Byte](1, 2)))
+    // gzip payload corruption -> CRC-32 (or the inflater) catches it
+    val good = ShardFixtures.gzip(2L)
     var caught = false
     var i = good.length / 2
     while (!caught && i < good.length - 9) {
       val bad = good.clone()
       bad(i) = (bad(i) ^ 0x20).toByte
       try {
-        Inflate.gunzipMembers(bad)
+        PageCodec.gzipMembers(bad)
         i += 1 // flip landed in slack (e.g. another member's name)
       } catch {
-        case e: IllegalArgumentException => caught = true
+        case e: IllegalArgumentException =>
+          assert(e.getMessage.contains("gzip"), e.getMessage)
+          caught = true
       }
     }
     assert(caught, "no mid-payload corruption was ever detected")
     // truncation
     intercept[IllegalArgumentException](
-      Inflate.gunzipMembers(good.take(good.length - 4)))
+      PageCodec.gzipMembers(good.take(good.length - 4)))
     // wrong FHCRC
-    val m = Inflate.gzipMember("x".getBytes, name = Some("n"),
-      headerCrc = true)
-    val badH = m.clone()
+    val badH = fullHeaderMember("x".getBytes)
     badH(4) = 99 // MTIME byte participates in the header CRC
     val e2 = intercept[IllegalArgumentException](
-      Inflate.gunzipMembers(badH))
+      PageCodec.gzipMembers(badH))
     assert(e2.getMessage.contains("FHCRC"), e2.getMessage)
   }
 
   test("decompression-bomb guard: output past the ceiling rejects " +
       "instead of inflating unbounded") {
-    // a 1032:1 deflate bomb would OOM the executor through the
-    // ByteArrayOutputStream; the emit path must reject at the cap. The
-    // cap is parameterized (default 1 GiB) so the guard is provable
-    // without emitting a real gibibyte.
-    val src = Array.fill[Byte](1000)('A')
-    val packed = Inflate.deflateFixed(src)
+    // a 1000:1 deflate stream must stop at the size the caller can
+    // vouch for: a parquet page's header size, an ORC chunk's block size
+    val src = Array.fill[Byte](100000)('A')
+    val bos = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(bos)
+    gz.write(src); gz.close()
+    val page = bos.toByteArray
     val e = intercept[IllegalArgumentException](
-      Inflate.inflateRaw(packed, 0, maxOut = 100))
-    assert(e.getMessage.contains("ceiling"), e.getMessage)
+      PageCodec.parquetDecompress(page, 0, page.length, 2, 100))
+    assert(e.getMessage.contains("limit"), e.getMessage)
+    val chunk = orcChunk(jdkDeflate(src, 9))
+    val e2 = intercept[IllegalArgumentException](
+      PageCodec.orcDecompress(chunk, 0, chunk.length, 1, 1000))
+    assert(e2.getMessage.contains("limit"), e2.getMessage)
     // at exactly the output size the stream still decodes
-    assert(Inflate.inflateRaw(packed, 0, maxOut = 1000)._1
-      .sameElements(src))
+    assert(PageCodec.parquetDecompress(page, 0, page.length, 2,
+      src.length).sameElements(src))
   }
 }

@@ -2,34 +2,32 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Lz4
+import graft.operators.{PageCodec, ShardFixtures}
 
-/** LZ4 block + frame decode (operators.Lz4), cross-validated against
-  * the INDEPENDENT lz4-java implementation on Spark's classpath
-  * (net.jpountz): xxHash32 equality on arbitrary buffers, our decoder
-  * over lz4-java-compressed blocks and frames, lz4-java's safe
-  * decompressor and frame reader over OUR encoder's output, plus the
-  * closed-form fixture contract and loud torn-frame rejects.
+/** LZ4 raw pages and framed shards through the [[PageCodec]] seam
+  * (lz4-java underneath): LZ4_RAW pages and ORC LZ4 chunks over
+  * lz4-java's block compressor, frames across every flag combination
+  * and block size, the closed-form fixture contract and loud torn-frame
+  * rejects.
   */
 class Lz4Spec extends AnyFunSuite {
 
   private val factory = net.jpountz.lz4.LZ4Factory.safeInstance()
-  private val xxFactory = net.jpountz.xxhash.XXHashFactory.safeInstance()
 
-  test("xxHash32 equals the jpountz implementation on every length " +
-      "shape and seed") {
-    val rnd = new scala.util.Random(31)
-    val jp = xxFactory.hash32()
-    for (len <- (0 to 40) ++ Seq(63, 64, 65, 255, 1000, 65536);
-        seed <- Seq(0, 1, -1, 0x9747b28c)) {
-      val buf = Array.fill[Byte](len)(rnd.nextInt().toByte)
-      assert(Lz4.xxhash32(buf, 0, len, seed) == jp.hash(buf, 0, len, seed),
-        s"len=$len seed=$seed")
-    }
-    // offset/window reads too
-    val big = Array.fill[Byte](512)(rnd.nextInt().toByte)
-    for (off <- Seq(1, 3, 17); len <- Seq(0, 5, 100, 400))
-      assert(Lz4.xxhash32(big, off, len, 7) == jp.hash(big, off, len, 7))
+  private def frame(content: Array[Byte], bs: Int, blockChecksum: Boolean,
+      contentChecksum: Boolean, withSize: Boolean): Array[Byte] = {
+    import net.jpountz.lz4.LZ4FrameOutputStream.{BLOCKSIZE, FLG}
+    val bits = Seq(FLG.Bits.BLOCK_INDEPENDENCE) ++
+      (if (blockChecksum) Seq(FLG.Bits.BLOCK_CHECKSUM) else Nil) ++
+      (if (contentChecksum) Seq(FLG.Bits.CONTENT_CHECKSUM) else Nil) ++
+      (if (withSize) Seq(FLG.Bits.CONTENT_SIZE) else Nil)
+    val bos = new java.io.ByteArrayOutputStream()
+    val fos = new net.jpountz.lz4.LZ4FrameOutputStream(bos,
+      BLOCKSIZE.valueOf(bs), if (withSize) content.length.toLong else -1L,
+      bits: _*)
+    fos.write(content)
+    fos.close()
+    bos.toByteArray
   }
 
   test("our block decoder decodes lz4-java's compressor output " +
@@ -42,25 +40,14 @@ class Lz4Spec extends AnyFunSuite {
       val rawr = Array.fill[Byte](n)(rnd.nextInt(8).toByte)
       for (src <- Seq(rep, rawr)) {
         val packed = comp.compress(src)
-        val dec = Lz4.decompressBlock(packed, 0, packed.length, n)
-        assert(dec.sameElements(src), s"n=$n roundtrip via jpountz")
+        val dec = PageCodec.parquetDecompress(packed, 0, packed.length, 7, n)
+        assert(dec.sameElements(src), s"n=$n LZ4_RAW page")
+        // the same block as one ORC LZ4 chunk behind its 3-byte header
+        val h = packed.length << 1
+        val chunk = Array(h, h >>> 8, h >>> 16).map(_.toByte) ++ packed
+        assert(PageCodec.orcDecompress(chunk, 0, chunk.length, 4, 1 << 18)
+          .sameElements(src), s"n=$n ORC chunk")
       }
-    }
-  }
-
-  test("lz4-java's safe decompressor accepts our block compressor") {
-    val rnd = new scala.util.Random(6)
-    val jd = factory.safeDecompressor()
-    for (n <- Seq(0, 1, 5, 12, 13, 64, 1000, 30000)) {
-      val src = Array.tabulate[Byte](n)(i =>
-        (((i / 5) * 13 + rnd.nextInt(3)) % 31).toByte)
-      val packed = Lz4.compressBlock(src)
-      val dec = new Array[Byte](n)
-      val got = jd.decompress(packed, 0, packed.length, dec, 0, n)
-      assert(got == n && dec.sameElements(src), s"n=$n ours->jpountz")
-      // and our own decoder agrees with our encoder
-      assert(Lz4.decompressBlock(packed, 0, packed.length, n)
-        .sameElements(src))
     }
   }
 
@@ -71,91 +58,66 @@ class Lz4Spec extends AnyFunSuite {
       (((i / 11) * 7 + rnd.nextInt(2)) % 61).toByte)
     for (bs <- 4 to 7; bc <- Seq(false, true); cc <- Seq(false, true);
         sz <- Seq(false, true)) {
-      val frame = Lz4.encodeFrame(content, bs, bc, cc, sz)
-      val info = Lz4.decodeFrame(frame)
-      assert(info.content.sameElements(content),
-        s"bs=$bs bc=$bc cc=$cc sz=$sz")
-      assert(info.blockChecksums == bc && info.contentChecksum == cc)
-      assert(info.declaredSize == (if (sz) Some(content.length.toLong)
-        else None))
-      // a 64KB-max-block frame over 200KB content spans several blocks
-      if (bs == 4) assert(info.nBlocks >= 3)
+      assert(PageCodec.lz4Frames(frame(content, bs, bc, cc, sz))
+        .sameElements(content), s"bs=$bs bc=$bc cc=$cc sz=$sz")
     }
   }
 
   test("our frame decoder reads lz4-java's frame writer; lz4-java's " +
       "frame reader reads ours") {
     val content = Array.tabulate[Byte](150000)(i => ((i / 9) % 47).toByte)
-    // jpountz frame writer -> our decoder
+    // lz4-java's default frame writer -> the shard decoder
     val bos = new java.io.ByteArrayOutputStream()
     val fos = new net.jpountz.lz4.LZ4FrameOutputStream(bos)
     fos.write(content)
     fos.close()
-    val theirs = bos.toByteArray
-    val info = Lz4.decodeFrame(theirs)
-    assert(info.content.sameElements(content), "jpountz frame -> ours")
-    // our frame writer -> jpountz reader
-    val ours = Lz4.encodeFrame(content, bsCode = 5,
-      blockChecksums = true, contentChecksum = true,
-      withContentSize = true)
+    assert(PageCodec.lz4Frames(bos.toByteArray).sameElements(content))
+    // the fixture writer -> lz4-java's own frame reader
     val fis = new net.jpountz.lz4.LZ4FrameInputStream(
-      new java.io.ByteArrayInputStream(ours))
-    val back = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    var n = fis.read(buf)
-    while (n >= 0) { back.write(buf, 0, n); n = fis.read(buf) }
+      new java.io.ByteArrayInputStream(ShardFixtures.lz4(9L)))
+    val back = fis.readAllBytes()
     fis.close()
-    assert(back.toByteArray.sameElements(content), "our frame -> jpountz")
+    assert(back.sameElements(ShardFixtures.lz4Content(9L)))
   }
 
   test("fixture family decodes to the closed form") {
     for (id <- 0L until 24L) {
-      val info = Lz4.decodeFrame(Lz4.fixturePayload(id))
-      val want = Lz4.fixtureContent(id)
-      assert(info.content.sameElements(want), s"id=$id content")
-      assert(info.blockChecksums == (id % 2 == 1), s"id=$id bc flag")
-      assert(info.declaredSize.isDefined == (id % 3 == 0), s"id=$id size")
-      val lines = new String(info.content, "UTF-8").split("\n")
-      assert(lines.length == Lz4.fixtureLineCount(id), s"id=$id lines")
-      assert(lines(0) == Lz4.fixtureLine(id, 0))
+      val content = PageCodec.lz4Frames(ShardFixtures.lz4(id))
+      assert(content.sameElements(ShardFixtures.lz4Content(id)),
+        s"id=$id content")
+      val lines = new String(content, "UTF-8").split("\n")
+      assert(lines.length == 40 + id % 30, s"id=$id lines")
+      assert(lines(0) ==
+        s"""{"doc":$id,"seq":0,"host":"h0.example.com","bytes":${id % 11}}""")
     }
   }
 
   test("torn frames reject loudly by name") {
-    val good = Lz4.fixturePayload(1L) // block checksums on
-    val notLz4 = intercept[IllegalArgumentException](
-      Lz4.decodeFrame("not an lz4 frame....".getBytes("US-ASCII")))
-    assert(notLz4.getMessage.contains("magic"), notLz4.getMessage)
+    val good = ShardFixtures.lz4(1L) // block checksums on
+    def reject(b: Array[Byte]): String =
+      intercept[IllegalArgumentException](PageCodec.lz4Frames(b)).getMessage
+    assert(reject("not an lz4 frame....".getBytes("US-ASCII"))
+      .contains("lz4 frame"))
     // flip a header flag: the header checksum must catch it
     val badHdr = good.clone()
     badHdr(4) = (badHdr(4) ^ 0x08).toByte
-    val e1 = intercept[IllegalArgumentException](Lz4.decodeFrame(badHdr))
-    assert(e1.getMessage.contains("header checksum") ||
-      e1.getMessage.contains("torn"), e1.getMessage)
+    assert(reject(badHdr).contains("lz4 frame"))
     // flip a payload byte: the block checksum must catch it
     val badBlock = good.clone()
     badBlock(badBlock.length / 2) =
       (badBlock(badBlock.length / 2) ^ 0x40).toByte
-    val e2 = intercept[IllegalArgumentException](Lz4.decodeFrame(badBlock))
-    assert(e2.getMessage.toLowerCase.contains("checksum") ||
-      e2.getMessage.contains("torn") || e2.getMessage.contains("LZ4"),
-      e2.getMessage)
+    assert(reject(badBlock).contains("lz4 frame"))
     // truncation
-    intercept[IllegalArgumentException](
-      Lz4.decodeFrame(good.take(good.length - 6)))
-    // a zero match offset inside a hand-built block
+    reject(good.take(good.length - 6))
+    // a zero match offset inside a hand-built LZ4_RAW page
     val bad = Array[Byte](0x10, 65, 0, 0, 0x50) // lit 'A', offset 0
     val e3 = intercept[IllegalArgumentException](
-      Lz4.decompressBlock(bad, 0, bad.length, 10))
-    assert(e3.getMessage.contains("offset"), e3.getMessage)
-    // reserved BD bits set WITH a matching header checksum: the
-    // checksum alone must not launder a spec-invalid descriptor
-    val badBd = good.clone()
-    val hcPos = 6 + (if ((badBd(4) & 0x08) != 0) 8 else 0)
-    badBd(5) = (badBd(5) | 0x80).toByte
-    badBd(hcPos) =
-      ((Lz4.xxhash32(badBd, 4, hcPos - 4, 0) >>> 8) & 0xff).toByte
-    val e4 = intercept[IllegalArgumentException](Lz4.decodeFrame(badBd))
-    assert(e4.getMessage.contains("reserved BD"), e4.getMessage)
+      PageCodec.parquetDecompress(bad, 0, bad.length, 7, 10))
+    assert(e3.getMessage.contains("lz4 page"), e3.getMessage)
+    // a page header size past the block format's maximum expansion
+    // rejects before it sizes an allocation
+    val e4 = intercept[IllegalArgumentException](
+      PageCodec.parquetDecompress(bad, 0, bad.length, 7, 1 << 30))
+    assert(e4.getMessage.contains("cannot inflate"), e4.getMessage)
   }
 }

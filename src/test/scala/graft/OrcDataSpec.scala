@@ -6,9 +6,9 @@ import graft.operators.OrcData
 
 /** ORC stripe-data decoding (operators.OrcData), cross-validated
   * against orc-core via Spark's own ORC reader on Spark-written files:
-  * every supported codec (chunk framing through this repo's own
-  * Inflate/Snappy/Lz4/Zstd), dictionary AND direct strings, real nulls
-  * through the present streams, booleans/ints/longs/floats/doubles/
+  * every supported codec (chunk framing through the PageCodec seam:
+  * the JDK inflater, snappy-java, lz4-java, zstd-jni), dictionary AND
+  * direct strings, real nulls through the present streams, booleans/ints/longs/floats/doubles/
   * dates, and multi-stripe files under a tiny stripe size. Torn files
   * reject loudly.
   */

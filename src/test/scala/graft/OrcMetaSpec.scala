@@ -6,10 +6,9 @@ import graft.operators.OrcMeta
 
 /** ORC tail parsing (operators.OrcMeta), cross-validated against the
   * INDEPENDENT orc-core implementation on Spark-written files across
-  * all four supported footer codecs — zstd (Spark 4's default, routed
-  * through this repo's from-scratch RFC 8878 decoder), snappy, zlib
-  * and lz4, each through this repo's own decoder against real foreign
-  * bytes — plus loud torn rejects.
+  * all four supported footer codecs — zstd (Spark 4's default), snappy,
+  * zlib and lz4, each through the PageCodec chunk path against real
+  * foreign bytes — plus loud torn rejects.
   */
 class OrcMetaSpec extends AnyFunSuite {
 
@@ -25,8 +24,7 @@ class OrcMetaSpec extends AnyFunSuite {
   test("Spark-written ORC: rows, stripes, types, int min/max/sum and " +
       "null flags match orc-core across zstd/snappy/zlib/lz4 footers") {
     import spark.implicits._
-    // zstd FIRST: Spark 4's default ORC codec, routed through this
-    // repo's from-scratch RFC 8878 decoder (the r13 seam, closed r14)
+    // zstd FIRST: Spark 4's default ORC codec
     for (codec <- Seq("zstd", "snappy", "zlib", "lz4")) {
     val dir = java.nio.file.Files
       .createTempDirectory(s"graft-orcmeta-$codec").toString

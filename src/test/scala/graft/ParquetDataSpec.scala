@@ -6,9 +6,9 @@ import graft.operators.ParquetData
 
 /** Parquet data-page decoding (operators.ParquetData), cross-validated
   * against Spark's own vectorized reader on Spark-written files: every
-  * supported codec (pages decompressed by this repo's own
-  * Snappy/Inflate/Zstd/Lz4), both writer versions (v1 and v2 pages),
-  * real nulls through the definition levels, dictionary AND
+  * supported codec (pages decompressed through the PageCodec seam:
+  * snappy-java, the JDK inflater, zstd-jni), both writer versions (v1
+  * and v2 pages), real nulls through the definition levels, dictionary AND
   * plain-fallback value pages, booleans/ints/longs/floats/doubles/
   * strings, and multi-page chunks under a tiny page size. Torn pages
   * reject loudly.

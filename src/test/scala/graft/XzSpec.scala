@@ -2,13 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Xz
+import graft.operators.{PageCodec, ShardFixtures}
 
-/** XZ/LZMA2 decode (operators.Xz), cross-validated against the
-  * INDEPENDENT org.tukaani.xz implementation: every preset (0..9,
-  * hash-chain AND BT4 match finders), all three check types,
-  * multi-block streams, plus the closed-form fixture contract and
-  * loud torn-stream rejects.
+/** xz shards through [[PageCodec.xz]] (tukaani underneath): every
+  * preset (0..9, hash-chain AND BT4 match finders), all three check
+  * types and the check type the decoder reports, multi-block streams,
+  * the closed-form fixture contract and loud torn-stream rejects.
   */
 class XzSpec extends AnyFunSuite {
 
@@ -34,10 +33,9 @@ class XzSpec extends AnyFunSuite {
         s"the quick brown fox $i jumps over the lazy dog")
         .mkString("\n").getBytes("UTF-8")))
     for ((name, src) <- shapes; preset <- 0 to 9) {
-      val packed = tukaani(src, preset)
-      val info = Xz.decode(packed)
-      assert(info.content.sameElements(src), s"$name preset=$preset")
-      assert(info.checkType == 4) // CRC64 default
+      val (content, checkType) = PageCodec.xz(tukaani(src, preset))
+      assert(content.sameElements(src), s"$name preset=$preset")
+      assert(checkType == 4) // CRC64 default
     }
   }
 
@@ -45,8 +43,9 @@ class XzSpec extends AnyFunSuite {
     val src = Array.tabulate[Byte](50000)(i => ((i / 17) % 61).toByte)
     for (check <- Seq(org.tukaani.xz.XZ.CHECK_CRC32,
         org.tukaani.xz.XZ.CHECK_CRC64, org.tukaani.xz.XZ.CHECK_SHA256)) {
-      val info = Xz.decode(tukaani(src, 4, check))
-      assert(info.content.sameElements(src), s"check=$check")
+      val (content, checkType) = PageCodec.xz(tukaani(src, 4, check))
+      assert(content.sameElements(src), s"check=$check")
+      assert(checkType == check)
     }
     // explicit flush() closes a block and opens another
     val bos = new java.io.ByteArrayOutputStream()
@@ -56,58 +55,43 @@ class XzSpec extends AnyFunSuite {
     xz.endBlock()
     xz.write(src, 20000, 30000)
     xz.close()
-    val info = Xz.decode(bos.toByteArray)
-    assert(info.content.sameElements(src), "multi-block")
-    assert(info.nBlocks == 2, s"expected 2 blocks, got ${info.nBlocks}")
-  }
-
-  test("our CRC64 is the ECMA-182 xz check") {
-    // pin against a tukaani-written stream: flip one payload-adjacent
-    // byte of the check itself and the named mismatch fires
-    val src = "crc64 pin".getBytes("US-ASCII")
-    val packed = tukaani(src, 0)
-    assert(Xz.decode(packed).content.sameElements(src))
-    // standard test vector: CRC64-XZ of "123456789"
-    val tv = "123456789".getBytes("US-ASCII")
-    assert(Xz.crc64(tv, 0, tv.length) == 0x995DC9BBDF1939FAL)
+    assert(PageCodec.xz(bos.toByteArray)._1.sameElements(src), "multi-block")
   }
 
   test("fixture family decodes to the closed form") {
     for (id <- 0L until 24L) {
-      val info = Xz.decode(Xz.fixturePayload(id))
-      assert(info.content.sameElements(Xz.fixtureContent(id)),
+      val (content, checkType) = PageCodec.xz(ShardFixtures.xz(id))
+      assert(content.sameElements(ShardFixtures.xzContent(id)),
         s"id=$id content")
-      assert(info.checkType ==
-        Seq(4, 1, 10)((id % 3).toInt), s"id=$id check type")
-      val lines = new String(info.content, "UTF-8").split("\n")
-      assert(lines.length == Xz.fixtureLineCount(id))
-      assert(lines(0) == Xz.fixtureLine(id, 0))
+      assert(checkType == Seq(4, 1, 10)((id % 3).toInt), s"id=$id check")
+      val lines = new String(content, "UTF-8").split("\n")
+      assert(lines.length == 45 + id % 40)
+      assert(lines(0) == s"""{"doc":$id,"seq":0,"tag":"t0","v":${id % 23}}""")
     }
   }
 
   test("torn streams reject loudly by name") {
-    val good = Xz.fixturePayload(0L) // CRC64 check
-    val notXz = intercept[IllegalArgumentException](
-      Xz.decode("certainly not an xz stream at all".getBytes("US-ASCII")))
-    assert(notXz.getMessage.contains("magic"), notXz.getMessage)
+    val good = ShardFixtures.xz(0L) // CRC64 check
+    val notXz = intercept[IllegalArgumentException](PageCodec.xz(
+      "certainly not an xz stream at all".getBytes("US-ASCII")))
+    assert(notXz.getMessage.contains("xz"), notXz.getMessage)
     // corrupt a payload byte mid-block: CRC64 (or structure) catches it
     var caught = 0
     for (i <- 20 until 40) {
       val bad = good.clone()
       bad(i) = (bad(i) ^ 0x08).toByte
-      try { Xz.decode(bad) } catch {
+      try { PageCodec.xz(bad) } catch {
         case _: IllegalArgumentException => caught += 1
       }
     }
     assert(caught > 0, "no mid-block corruption detected")
     // truncation
     intercept[IllegalArgumentException](
-      Xz.decode(good.take(good.length - 6)))
+      PageCodec.xz(good.take(good.length - 6)))
     // footer magic
     val badFt = good.clone()
     badFt(badFt.length - 1) = 'Q'
-    val e = intercept[IllegalArgumentException](Xz.decode(badFt))
-    assert(e.getMessage.contains("YZ") || e.getMessage.contains("CRC"),
-      e.getMessage)
+    val e = intercept[IllegalArgumentException](PageCodec.xz(badFt))
+    assert(e.getMessage.contains("xz"), e.getMessage)
   }
 }

@@ -2,16 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Zstd
+import graft.operators.{PageCodec, ShardFixtures}
 
-/** Zstandard decode (operators.Zstd), cross-validated against the
-  * INDEPENDENT zstd-jni (libzstd) implementation on Spark's classpath:
-  * jni-compressed streams across the level classes (fast/default/
-  * lazy/btopt/btultra2), with and without content checksums, streamed
-  * frames without a declared content size, multi-block inputs big
-  * enough to exercise treeless literals and repeat tables, multi-frame
-  * concatenation with skippable leaders, plus XXH64 parity against
-  * lz4-java's independent xxhash and loud torn-stream rejects.
+/** zstd through the [[PageCodec]] seam, which hands every frame to
+  * zstd-jni (libzstd): jni-compressed frames across the level classes
+  * (fast/default/lazy/btopt/btultra2), with and without content
+  * checksums, streamed frames without a declared content size,
+  * multi-block inputs, multi-frame shards with skippable leaders, the
+  * parquet page entry point's size contract, and loud torn-stream
+  * rejects that name the codec and libzstd's cause.
   */
 class ZstdSpec extends AnyFunSuite {
 
@@ -42,54 +41,26 @@ class ZstdSpec extends AnyFunSuite {
   test("decodes zstd-jni output bit-exactly across the level classes " +
       "and shapes (foreign-origin bytes)") {
     for ((name, src) <- shapes; level <- Seq(1, 3, 6, 9, 12, 17, 19, 22)) {
-      val info = Zstd.decode(jni(src, level))
-      assert(info.content.sameElements(src), s"$name level=$level")
-      assert(info.nFrames == 1 && info.nChecksums == 0)
+      val packed = jni(src, level)
+      val (content, frames) = PageCodec.zstdFrames(packed)
+      assert(content.sameElements(src), s"$name level=$level")
+      assert(frames == 1)
+      assert(PageCodec.parquetDecompress(packed, 0, packed.length, 6,
+        src.length).sameElements(src), s"$name level=$level page")
     }
   }
 
-  test("the from-scratch COMPRESSOR round-trips through zstd-jni AND " +
-      "our own decoder on every shape, and actually shrinks " +
-      "repetitive input") {
+  test("the page compressor round-trips through the page decoder on " +
+      "every shape and shrinks repetitive input") {
     for ((name, src) <- shapes) {
-      val packed = Zstd.compress(src)
-      assert(Zstd.decode(packed).content.sameElements(src),
-        s"[$name] own-decoder round trip")
-      val foreign = com.github.luben.zstd.Zstd.decompress(packed,
-        math.max(src.length, 1))
-      assert(foreign.sameElements(src), s"[$name] zstd-jni round trip")
+      val packed = PageCodec.parquetCompress(src, PageCodec.ParquetZstd)
+      assert(PageCodec.parquetDecompress(packed, 0, packed.length, 6,
+        src.length).sameElements(src), s"[$name] page round trip")
     }
-    // predefined-FSE sequence coding must beat raw on repetitive text
-    val text = (0 until 4000).map(i =>
-      s"the quick brown fox $i jumps over the lazy dog")
-      .mkString("\n").getBytes("UTF-8")
-    val ratio = Zstd.compress(text).length.toDouble / text.length
+    val text = shapes(4)._2
+    val ratio = PageCodec.parquetCompress(text, PageCodec.ParquetZstd)
+      .length.toDouble / text.length
     assert(ratio < 0.5, s"compressed to ${ratio * 100}% of input")
-    // runs shape compresses very hard
-    val runs = Array.tabulate[Byte](60000)(i =>
-      if ((i / 300) % 2 == 0) 0 else ((i / 50) % 9).toByte)
-    assert(Zstd.compress(runs).length < runs.length / 10)
-    // incompressible input must not blow up past raw-block overhead
-    val rand = Array.fill[Byte](40000)(rnd.nextInt().toByte)
-    assert(Zstd.compress(rand).length <= rand.length + 16)
-  }
-
-  test("encodeRawFrame past the window cap emits a bounded-window " +
-      "frame that both this decoder and zstd-jni accept") {
-    // a single-segment header would declare window = content size
-    // > 2^27, which decode()'s own scale guard refuses (ADVICE r15);
-    // the oversized path must switch to a real Window_Descriptor
-    val n = (1 << 27) + 12345
-    val data = new Array[Byte](n)
-    var i = 0
-    while (i < n) { data(i) = (i * 31 >>> 3).toByte; i += 997 }
-    val frame = graft.operators.Zstd.encodeRawFrame(data)
-    val info = graft.operators.Zstd.decode(frame)
-    assert(info.content.length == n)
-    assert(java.util.Arrays.equals(info.content, data))
-    val foreign = com.github.luben.zstd.Zstd.decompress(frame, n)
-    assert(java.util.Arrays.equals(foreign, data),
-      "zstd-jni rejects the oversized raw frame")
   }
 
   test("content checksums verify when present; corruption under the " +
@@ -98,8 +69,7 @@ class ZstdSpec extends AnyFunSuite {
       s"checksum line $i with some repeated payload payload")
       .mkString("\n").getBytes("UTF-8")
     val packed = jni(src, 3, checksum = true)
-    val info = Zstd.decode(packed)
-    assert(info.content.sameElements(src) && info.nChecksums == 1)
+    assert(PageCodec.zstdFrames(packed)._1.sameElements(src))
     // flip one payload byte mid-frame: either a structural check or
     // the XXH64 content checksum must catch it — silence is the bug
     var caught = 0
@@ -107,7 +77,7 @@ class ZstdSpec extends AnyFunSuite {
       val bad = packed.clone()
       bad(i) = (bad(i) ^ 0x10).toByte
       try {
-        Zstd.decode(bad)
+        PageCodec.zstdFrames(bad)
         ()
       } catch { case _: IllegalArgumentException => caught += 1 }
     }
@@ -130,8 +100,17 @@ class ZstdSpec extends AnyFunSuite {
         o += n
       }
       zs.close()
-      val info = Zstd.decode(bos.toByteArray)
-      assert(info.content.sameElements(src), s"streamed level=$level")
+      val frame = bos.toByteArray
+      assert(com.github.luben.zstd.Zstd.getFrameContentSize(frame) == -1L,
+        "the frame must not declare its size")
+      assert(PageCodec.zstdFrames(frame)._1.sameElements(src),
+        s"streamed level=$level")
+      assert(PageCodec.parquetDecompress(frame, 0, frame.length, 6,
+        src.length).sameElements(src), s"streamed page level=$level")
+      // the page header's size bounds the streamed decode
+      val e = intercept[IllegalArgumentException](PageCodec
+        .parquetDecompress(frame, 0, frame.length, 6, src.length - 1))
+      assert(e.getMessage.contains("zstd"), e.getMessage)
     }
   }
 
@@ -142,156 +121,60 @@ class ZstdSpec extends AnyFunSuite {
     val skip = Array[Byte](0x50, 0x2a, 0x4d.toByte, 0x18, 4, 0, 0, 0,
       'm', 'e', 't', 'a')
     val payload = skip ++ jni(a, 3, checksum = true) ++ jni(b, 19)
-    val info = Zstd.decode(payload)
-    assert(info.content.sameElements(a ++ b))
-    assert(info.nFrames == 2 && info.nSkippable == 1 &&
-      info.nChecksums == 1)
-  }
-
-  test("XXH64 equals the independent lz4-java implementation on every " +
-      "length 0..130 and on block shapes") {
-    val f = net.jpountz.xxhash.XXHashFactory.fastestJavaInstance().hash64()
-    val buf = Array.tabulate[Byte](130)(i => ((i * 31 + 7) % 251).toByte)
-    for (len <- 0 to 130) {
-      val want = f.hash(buf, 0, len, 0L)
-      assert(Zstd.xxh64(buf, 0, len, 0L) == want, s"len=$len")
-      val seeded = f.hash(buf, 0, len, 0x12345678L)
-      assert(Zstd.xxh64(buf, 0, len, 0x12345678L) == seeded,
-        s"len=$len seeded")
-    }
-    val big = Array.fill[Byte](100000)(rnd.nextInt().toByte)
-    assert(Zstd.xxh64(big, 0, big.length, 0L) ==
-      f.hash(big, 0, big.length, 0L))
-    assert(Zstd.xxh64(big, 3, 99990, 0L) == f.hash(big, 3, 99990, 0L))
+    val (content, frames) = PageCodec.zstdFrames(payload)
+    assert(content.sameElements(a ++ b))
+    assert(frames == 2)
   }
 
   test("fixture family decodes to the closed form") {
     for (id <- 0L to 11L) {
-      val info = Zstd.decode(Zstd.fixturePayload(id))
-      assert(info.content.sameElements(Zstd.fixtureContent(id)),
+      val (content, frames) = PageCodec.zstdFrames(ShardFixtures.zstd(id))
+      assert(content.sameElements(ShardFixtures.zstdContent(id)),
         s"id=$id content")
-      assert(info.nFrames == (if (id % 4 == 3) 2 else 1), s"id=$id frames")
-      assert(info.nSkippable == (if (id % 4 == 3) 1 else 0))
-      assert(info.nChecksums ==
-        (if (id % 2 == 0) info.nFrames else 0), s"id=$id checksums")
-      val lines = new String(info.content, "UTF-8").split("\n")
-      assert(lines.length == Zstd.fixtureLineCount(id))
-      assert(lines(0) == Zstd.fixtureLine(id, 0))
+      assert(frames == (if (id % 4 == 3) 2 else 1), s"id=$id frames")
+      val lines = new String(content, "UTF-8").split("\n")
+      assert(lines.length == 70 + id % 60)
+      assert(lines(0) == s"""{"doc":$id,"seq":0,"lab":"z0","x":${id % 21}}""")
     }
   }
 
-  test("compressDict ENCODES dictionary-referencing frames: zstd-jni " +
-      "and this decoder both round-trip them, the ID gates decoding, " +
-      "and dictionary matches actually shrink the frame") {
-    val samples = (0 until 200).map(i =>
-      (s"""{"user":"u${i % 17}","event":"evt_${i % 5}","payload":""" +
-        s""""${"x" * (i % 23)}","seq":$i}""").getBytes("UTF-8"))
-    val trainer = new com.github.luben.zstd.ZstdDictTrainer(
-      1 << 20, 16 * 1024)
-    for (s <- samples; _ <- 0 until 4) trainer.addSample(s)
-    val trained = trainer.trainSamples()
-    val doc = samples(77)
-    val packed = graft.operators.Zstd.compressDict(doc, trained)
-    // our own decoder, same dict
-    assert(graft.operators.Zstd.decode(packed, trained).content
-      .sameElements(doc))
-    // the frame carries the dictionary ID: decoding without the dict
-    // must reject loudly, with a WRONG dict too
-    val e = intercept[IllegalArgumentException](
-      graft.operators.Zstd.decode(packed))
-    assert(e.getMessage.contains("dictionary"), e.getMessage)
-    // zstd-jni (libzstd), handed the same dictionary
-    val dctx = new com.github.luben.zstd.ZstdDecompressCtx()
-    val foreign = try {
-      dctx.loadDict(trained)
-      dctx.decompress(packed, doc.length)
-    } finally dctx.close()
-    assert(foreign.sameElements(doc), "zstd-jni dict round trip")
-    // raw-content dictionary: ID-less frame, matches reach the dict
-    val rawDict = ("common prefix material the documents share " * 40)
-      .getBytes("UTF-8")
-    val doc2 = ("common prefix material the documents share " * 3 +
-      "plus a unique tail 12345").getBytes("UTF-8")
-    val packedRaw = graft.operators.Zstd.compressDict(doc2, rawDict)
-    assert(graft.operators.Zstd.decode(packedRaw, rawDict).content
-      .sameElements(doc2))
-    val dctx2 = new com.github.luben.zstd.ZstdDecompressCtx()
-    val foreign2 = try {
-      dctx2.loadDict(rawDict)
-      dctx2.decompress(packedRaw, doc2.length)
-    } finally dctx2.close()
-    assert(foreign2.sameElements(doc2), "zstd-jni raw-dict round trip")
-    // the dictionary must actually BUY something: doc2 is mostly
-    // dictionary material, so the dict frame beats the dict-less one
-    assert(packedRaw.length <
-      graft.operators.Zstd.compress(doc2).length,
-      s"dict frame ${packedRaw.length} vs plain " +
-        s"${graft.operators.Zstd.compress(doc2).length}")
-  }
-
-  test("dictionary frames decode: a TRAINED structured dictionary " +
-      "(entropy tables + rep offsets) and a raw-content dictionary, " +
-      "both jni-compressed") {
-    // samples that share heavy structure → a useful trained dictionary
-    val samples = (0 until 200).map(i =>
-      (s"""{"user":"u${i % 17}","event":"evt_${i % 5}","payload":""" +
-        s""""${"x" * (i % 23)}","seq":$i}""").getBytes("UTF-8"))
-    val trainer = new com.github.luben.zstd.ZstdDictTrainer(
-      1 << 20, 16 * 1024)
-    for (s <- samples; _ <- 0 until 4) trainer.addSample(s)
-    val trained = trainer.trainSamples()
-    assert(trained.length > 256) // magic + tables + content
-    val doc = samples(123)
-    val ctx = new com.github.luben.zstd.ZstdCompressCtx()
-    val packedTrained = try {
-      ctx.setLevel(9)
-      ctx.loadDict(trained)
-      ctx.compress(doc)
-    } finally ctx.close()
-    val got = Zstd.decode(packedTrained, trained)
-    assert(got.content.sameElements(doc))
-    // without the dictionary the frame must reject loudly by ID
-    val e = intercept[IllegalArgumentException](Zstd.decode(packedTrained))
-    assert(e.getMessage.contains("dictionary"), e.getMessage)
-    // raw-content dictionary (no magic): pure window preload
-    val rawDict = ("common prefix material the documents share " * 40)
-      .getBytes("UTF-8")
-    val doc2 = ("common prefix material the documents share " * 3 +
-      "plus a unique tail 12345").getBytes("UTF-8")
-    val ctx2 = new com.github.luben.zstd.ZstdCompressCtx()
-    val packedRaw = try {
-      ctx2.setLevel(19)
-      ctx2.loadDict(rawDict)
-      ctx2.compress(doc2)
-    } finally ctx2.close()
-    assert(Zstd.decode(packedRaw, rawDict).content.sameElements(doc2))
-  }
-
   test("torn streams reject loudly by name") {
-    val notZstd = intercept[IllegalArgumentException](
-      Zstd.decode("definitely not a zstd frame".getBytes("US-ASCII")))
-    assert(notZstd.getMessage.contains("magic"), notZstd.getMessage)
+    def reject(b: Array[Byte]): String = intercept[IllegalArgumentException](
+      PageCodec.zstdFrames(b)).getMessage
+    val notZstd = reject("definitely not a zstd frame".getBytes("US-ASCII"))
+    assert(notZstd.contains("zstd"), notZstd)
     val good = jni(shapes(4)._2, 3, checksum = true)
     // truncation at several depths
     for (cut <- Seq(3, good.length / 2, good.length - 1))
-      intercept[IllegalArgumentException](Zstd.decode(good.take(cut)))
+      assert(reject(good.take(cut)).contains("zstd"))
     // trailing garbage after a complete frame
-    intercept[IllegalArgumentException](
-      Zstd.decode(good ++ Array[Byte](1, 2, 3)))
+    reject(good ++ Array[Byte](1, 2, 3))
     // reserved frame-descriptor bit
     val badDesc = good.clone()
     badDesc(4) = (badDesc(4) | 0x08).toByte
-    val e1 = intercept[IllegalArgumentException](Zstd.decode(badDesc))
-    assert(e1.getMessage.contains("reserved"), e1.getMessage)
-    // dictionary frames reject by name (hand-built header: dict flag 1)
-    val dict = Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte,
-      0x01, 0x00, 0x07)
-    val e2 = intercept[IllegalArgumentException](Zstd.decode(dict))
-    assert(e2.getMessage.contains("dictionary"), e2.getMessage)
+    reject(badDesc)
+    // a frame that names a dictionary rejects without it
+    val trainer = new com.github.luben.zstd.ZstdDictTrainer(
+      1 << 20, 16 * 1024)
+    for (i <- 0 until 800) trainer.addSample(
+      (s"""{"user":"u${i % 17}","event":"evt_${i % 5}","payload":""" +
+        s""""${"x" * (i % 23)}","seq":$i}""").getBytes("UTF-8"))
+    val ctx = new com.github.luben.zstd.ZstdCompressCtx()
+    val needsDict = try {
+      ctx.setLevel(9)
+      ctx.loadDict(trainer.trainSamples())
+      ctx.compress("""{"user":"u3","event":"evt_1","seq":7}""".getBytes)
+    } finally ctx.close()
+    val e2 = reject(needsDict)
+    assert(e2.toLowerCase.contains("dictionary"), e2)
     // wrong checksum: flip the stored checksum itself
     val badSum = good.clone()
     badSum(badSum.length - 1) = (badSum(badSum.length - 1) ^ 0x55).toByte
-    val e3 = intercept[IllegalArgumentException](Zstd.decode(badSum))
-    assert(e3.getMessage.contains("checksum"), e3.getMessage)
+    val e3 = reject(badSum)
+    assert(e3.toLowerCase.contains("checksum"), e3)
+    // the page entry point checks the declared size before allocating
+    val e4 = intercept[IllegalArgumentException](PageCodec
+      .parquetDecompress(good, 0, good.length, 6, 123))
+    assert(e4.getMessage.contains("expected 123"), e4.getMessage)
   }
 }
