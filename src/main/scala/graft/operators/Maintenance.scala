@@ -1,12 +1,18 @@
 package graft.operators
 
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
-import java.nio.file.attribute.FileTime
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import java.util.concurrent.{ScheduledThreadPoolExecutor, TimeUnit}
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 
 /** Table maintenance over plain parquet — the engine features standing in
   * for the reference's Delta OPTIMIZE / VACUUM / Z-ORDER jobs
@@ -301,9 +307,10 @@ object Maintenance extends Logging {
     * full listing plus the add deltas after it. None when the log does
     * not cover the current version (a pre-protocol table whose history
     * was never snapshotted). This is the listing that lets every
-    * planner over a committed table — batch scan, pushed aggregation,
-    * the version-tailing stream — run with ZERO directory walks: at
-    * 100 TB an object-store LIST over a partitioned table is
+    * planner over a committed table — the graftpq batch scan, pushed
+    * aggregation, the version-tailing stream, and [[readTable]] through
+    * [[readFiles]] — run with ZERO directory walks and no Spark listing
+    * job: at 100 TB an object-store LIST over a partitioned table is
     * O(files-ever) round trips, the log read is O(live files) bytes
     * off a handful of small sequential files.
     */
@@ -356,7 +363,7 @@ object Maintenance extends Logging {
     // basenames match live and quarantined copies alike); later vectors
     // do not exist yet at this version
     applyColumnMap(tablePath, withDvApplied(spark, tablePath,
-      readFilesWithBases(spark, tablePath, resolved.map(_._2.get.toString)),
+      readFilesWithBases(spark, tablePath, resolved.map(_._2.get.toFile)),
       upTo = Some(version)))
   }
 
@@ -366,20 +373,77 @@ object Maintenance extends Logging {
     * union — a no-op distinction for unpartitioned tables.
     */
   private def readFilesWithBases(spark: SparkSession, tablePath: String,
-      paths: Seq[String]): DataFrame = {
+      files: Seq[java.io.File]): DataFrame = {
     val schema = readTableSchema(tablePath)
     val partCols = readPartitioning(tablePath)
-    def read(base: String, ps: Seq[String]) = {
-      val r = schema.map(spark.read.schema).getOrElse(spark.read)
-      (if (partCols.nonEmpty) r.option("basePath", base) else r)
-        .parquet(ps: _*)
-    }
     val rem = removedPath(tablePath)
-    val (quarantined, live) = paths.partition(_.startsWith(rem))
+    val (quarantined, live) = files.partition(_.getPath.startsWith(rem))
     Seq((tablePath, live), (rem, quarantined))
       .filter(_._2.nonEmpty)
-      .map { case (b, ps) => read(b, ps) }
+      .map { case (b, group) =>
+        readFiles(spark, tablePath, group, schema, basePathOf(b, partCols))
+      }
       .reduce(_.unionByName(_))
+  }
+
+  /** `basePath` for a read of an explicit list of live files: the table
+    * root keeps partition-directory columns resolvable; an unpartitioned
+    * table reads without one.
+    */
+  private def basePathOf(tablePath: String,
+      partCols: Seq[String]): Option[String] =
+    if (partCols.nonEmpty) Some(tablePath) else None
+
+  /** The one reader of a table's own data files (and of the parquet its
+    * log keeps: change files, deletion vectors). It builds Spark's own
+    * `InMemoryFileIndex` + `HadoopFsRelation` + `ParquetFileFormat`, the
+    * relation `spark.read.parquet(paths)` builds, but pre-fills the
+    * index's status cache from `files` — paths the caller already holds
+    * from the commit log or from its walk under the commit lock. So
+    * Spark never lists them: through `spark.read`, more than
+    * `parallelPartitionDiscovery.threshold` (32) paths cost a listing
+    * job with one task per path, the bulk of a DML op's wall time on a
+    * partitioned table. Partition inference from `basePath`, the schema,
+    * the column order (data columns, then partition columns),
+    * `input_file_name()` and `_metadata` resolve exactly as through
+    * `spark.read`. A listed file that no longer exists fails here,
+    * naming it and the table, never as a silently shorter read.
+    */
+  private def readFiles(spark: SparkSession, tablePath: String,
+      files: Seq[java.io.File], schema: Option[StructType],
+      basePath: Option[String]): DataFrame = {
+    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val statuses = files.map { f =>
+      val a = try Files.readAttributes(f.toPath, classOf[BasicFileAttributes])
+      catch { case _: java.nio.file.NoSuchFileException =>
+        throw new IllegalStateException(s"$tablePath lists '$f' but no " +
+          "such data file exists (vacuumed or torn table)")
+      }
+      val p = fs.makeQualified(new Path(f.getAbsolutePath))
+      new FileStatus(a.size, false, 1, fs.getDefaultBlockSize(p),
+        a.lastModifiedTime.toMillis, p)
+    }
+    val byPath = statuses.map(s => s.getPath -> Array(s)).toMap
+    val listed = new FileStatusCache {
+      override def getLeafFiles(path: Path) = byPath.get(path)
+      override def putLeafFiles(path: Path, leaves: Array[FileStatus]) = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val options = basePath.map("basePath" -> _).toMap
+    val index = new InMemoryFileIndex(spark, statuses.map(_.getPath),
+      options, schema, listed)
+    val partSchema = index.partitionSchema
+    val resolver = spark.sessionState.conf.resolver
+    val format = new ParquetFileFormat
+    // DataSource's own split: a declared schema minus the inferred
+    // partition columns, else the first file's footer
+    val dataSchema = schema.map(s => StructType(s.filterNot(f =>
+        partSchema.exists(p => resolver(p.name, f.name)))))
+      .orElse(format.inferSchema(spark, options, index.allFiles()))
+      .getOrElse(throw new IllegalStateException(
+        s"$tablePath: no parquet schema to infer — no data files"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+      dataSchema.toNullable, None, format, options)(spark))
   }
 
   /** Change Data Feed analogue (Delta's `table_changes`): the rows ADDED
@@ -409,7 +473,7 @@ object Maintenance extends Logging {
     if (toVersion > current) throw new IllegalStateException(
       s"version $toVersion of $tablePath does not exist yet " +
         s"(table is at version $current)")
-    // (version, absolute file paths, change type)
+    // (version, files, change type)
     val slices = ((fromVersion + 1) to toVersion).flatMap { v =>
       readFileList(snapshotAddPath(tablePath, v)) match {
         case Some(files) =>
@@ -422,7 +486,7 @@ object Maintenance extends Logging {
             s"changes ($fromVersion, $toVersion] of $tablePath are no " +
               s"longer readable: ${missing.size} files were reclaimed by " +
               s"a rewrite or vacuum (first missing: ${missing.head})")
-          Some((v, resolved.map(_._2.get.toString), Some("insert")))
+          Some((v, resolved.map(_._2.get.toFile), Some("insert")))
         case None =>
           val isDelete =
             Files.exists(Paths.get(snapshotDeletePath(tablePath, v))) ||
@@ -442,8 +506,7 @@ object Maintenance extends Logging {
                 "reclaimed by vacuumRemoved; its changes cannot be " +
                 "reconstructed")
             // delete change files carry plain table rows (type implied)
-            Some((v, parts.toSeq.map(_.getAbsolutePath),
-              if (isTyped) None else Some("delete")))
+            Some((v, parts.toSeq, if (isTyped) None else Some("delete")))
           }
           // a RESTORE changes row content but records no change files —
           // serving the range would silently drop its changes, the one
@@ -464,19 +527,16 @@ object Maintenance extends Logging {
       }
     }
     val schema = readTableSchema(tablePath)
-    val reads = slices.map { case (v, paths, fixedType) =>
+    val reads = slices.map { case (v, files, fixedType) =>
       val base = fixedType match {
         // insert slices are table data files (live or quarantined):
         // base-grouped partition-aware read through the tracked schema
-        case Some("insert") => readFilesWithBases(spark, tablePath, paths)
+        case Some("insert") => readFilesWithBases(spark, tablePath, files)
         // delete change files carry plain table rows as DATA columns
         // (partition values included) — tracked schema, no basePath
-        case Some(_) => schema match {
-          case Some(sc) => spark.read.schema(sc).parquet(paths: _*)
-          case None => spark.read.parquet(paths: _*)
-        }
+        case Some(_) => readFiles(spark, tablePath, files, schema, None)
         // merge change files carry their own extra column: read as written
-        case None => spark.read.parquet(paths: _*)
+        case None => readFiles(spark, tablePath, files, None, None)
       }
       val typed = fixedType match {
         case Some(t) => base.withColumn("_change_type", lit(t))
@@ -582,15 +642,22 @@ object Maintenance extends Logging {
   }
 
   /** Read the table through its tracked schema (tables written by
-    * [[commitAppend]]); falls back to plain parquet inference for tables
-    * that predate the protocol.
+    * [[commitAppend]]). When the commit log covers the current version
+    * the read plans from its listing ([[liveFileListing]] through
+    * [[readFiles]]) and the directory is never listed; a table the log
+    * does not cover (one predating the protocol) reads its directory,
+    * with plain parquet inference when no schema is tracked.
     */
-  def readTable(spark: SparkSession, tablePath: String): DataFrame =
-    applyColumnMap(tablePath, withDvApplied(spark, tablePath,
-      readTableSchema(tablePath) match {
-        case Some(sc) => spark.read.schema(sc).parquet(tablePath)
-        case None => spark.read.parquet(tablePath)
-      }))
+  def readTable(spark: SparkSession, tablePath: String): DataFrame = {
+    val schema = readTableSchema(tablePath)
+    val df = liveFileListing(tablePath) match {
+      case Some(rels) => readFiles(spark, tablePath,
+        rels.map(new java.io.File(tablePath, _)), schema, Some(tablePath))
+      case None =>
+        schema.map(spark.read.schema).getOrElse(spark.read).parquet(tablePath)
+    }
+    applyColumnMap(tablePath, withDvApplied(spark, tablePath, df))
+  }
 
   // ---------------------------------------------------------------------
   // Column mapping — Delta's metadata-only `ALTER TABLE ... RENAME
@@ -600,7 +667,9 @@ object Maintenance extends Logging {
   // plus a dropped-physical set. The LOGICAL view is derived at the
   // table boundary:
   //   reads   — readTable / readAsOf / streamTable / scanPruned /
-  //             readChangesBetween project physical → logical;
+  //             readChangesBetween / bloomLookup project physical →
+  //             logical (the batch ones first read their files
+  //             through readFiles under the physical tracked schema);
   //   appends — commitAppend / mergeInto translate incoming logical
   //             names → physical before staging, so every data file
   //             stays physically consistent;
@@ -867,6 +936,51 @@ object Maintenance extends Logging {
       .filter(_.getName.endsWith("__stage"))
       .foreach(_.delete())
   }
+
+  /** Move a rewrite's originals out of the live set into the delete
+    * quarantine — history, not garbage: earlier versions keep
+    * time-traveling through it. Caller holds the commit lock.
+    */
+  private def quarantine(tablePath: String,
+      files: Seq[java.io.File]): Unit = {
+    val root = Paths.get(tablePath)
+    files.foreach { f =>
+      val dest = Paths.get(removedPath(tablePath))
+        .resolve(root.relativize(f.toPath))
+      Files.createDirectories(dest.getParent)
+      Files.move(f.toPath, dest, StandardCopyOption.ATOMIC_MOVE)
+    }
+  }
+
+  /** Move a rewrite's staged files in as version `v` once its originals
+    * (`gone`, by name) left the live set. Stats of the gone files are
+    * dropped (they would pin dead names) and the new files get fresh
+    * footer stats; the live registry and the version's full snapshot
+    * listing follow. The caller writes its markers, then the version.
+    */
+  private def commitRewrite(spark: SparkSession, tablePath: String,
+      stage: String, prefix: String, v: Long, gone: Set[String]): Unit = {
+    val committed = moveStagedIn(tablePath, stage, prefix, v)
+    writeFileStats(tablePath,
+      readFileStats(tablePath).toSeq.collect {
+        case ((f, c), (l, h)) if !gone.contains(f) => (f, c, l, h)
+      }, append = false)
+    writeFileStats(tablePath,
+      footerStats(spark, committed.map(_.toFile)) ++
+        partitionStats(tablePath, committed), append = true)
+    if (Files.exists(Paths.get(liveFilesPath(tablePath))))
+      recordLiveFiles(tablePath)
+    val root = Paths.get(tablePath)
+    writeFileList(snapshotFullPath(tablePath, v),
+      listParquetFiles(new java.io.File(tablePath))
+        .map(f => root.relativize(f.toPath).toString))
+  }
+
+  /** (file name, rows) per file of a DML confirmation scan. */
+  private def rowsPerFile(df: DataFrame): Array[(String, Long)] =
+    df.groupBy(input_file_name().as("path")).count().collect()
+      .map(r => (Paths.get(new java.net.URI(r.getString(0)).getPath)
+        .getFileName.toString, r.getLong(1)))
 
   /** Optimistically commit an append: stage the write OUTSIDE the lock
     * (the Spark job), then under the lock move the staged files into the
@@ -1711,19 +1825,25 @@ object Maintenance extends Logging {
     */
   def skippingPlan(tablePath: String, column0: String, lo: Double,
       hi: Double): (Seq[String], Int) = {
-    val column = toPhysical(tablePath, column0) // stats are physical
     val files = listParquetFiles(new java.io.File(tablePath))
-    val byName = files.map(f => f.getName -> f).toMap
-    val all = files.map(_.getName).sorted
+    (skippingPlan(tablePath, column0, lo, hi, files).map(_.getName),
+      files.size)
+  }
+
+  /** [[skippingPlan]] over the live files the caller already walked:
+    * the kept files, in name order.
+    */
+  private def skippingPlan(tablePath: String, column0: String, lo: Double,
+      hi: Double, files: Seq[java.io.File]): Seq[java.io.File] = {
+    val column = toPhysical(tablePath, column0) // stats are physical
     val stats = readFileStats(tablePath)
-    val kept = all.filter { f =>
-      stats.get((f, column))
-        .orElse(footerRanges(byName(f)).get(column)) match {
+    files.sortBy(_.getName).filter { f =>
+      stats.get((f.getName, column))
+        .orElse(footerRanges(f).get(column)) match {
         case Some((l, h)) => h >= lo && l <= hi
         case None => true
       }
     }
-    (kept, all.size)
   }
 
   /** Data-skipping scan: read only the files whose recorded [min, max]
@@ -1733,7 +1853,8 @@ object Maintenance extends Logging {
     */
   def scanPruned(spark: SparkSession, tablePath: String, column: String,
       lo: Double, hi: Double): DataFrame = {
-    val (kept, _) = skippingPlan(tablePath, column, lo, hi)
+    val kept = skippingPlan(tablePath, column, lo, hi,
+      listParquetFiles(new java.io.File(tablePath)))
     val schema = readTableSchema(tablePath)
     if (kept.isEmpty) {
       // logical view even when empty: readTable's schema is already
@@ -1742,13 +1863,9 @@ object Maintenance extends Logging {
       applyColumnMap(tablePath, spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
     } else {
-      val byName = listParquetFiles(new java.io.File(tablePath))
-        .map(f => f.getName -> f.getAbsolutePath).toMap
-      val reader = schema.map(spark.read.schema).getOrElse(spark.read)
       // basePath keeps partition-dir columns resolvable on a pruned list
       applyColumnMap(tablePath, withDvApplied(spark, tablePath,
-        reader.option("basePath", tablePath)
-          .parquet(kept.map(byName): _*)))
+        readFiles(spark, tablePath, kept, schema, Some(tablePath))))
     }
   }
 
@@ -1948,21 +2065,42 @@ object Maintenance extends Logging {
     * reference only quarantined names).
     */
   def outstandingDvFiles(tablePath: String): Set[String] = {
-    val live = listParquetFiles(new java.io.File(tablePath))
-      .map(_.getName).toSet
+    val marked = dvMarkedFiles(tablePath)
+    // no vectors ⇒ nothing outstanding, without walking the table
+    if (marked.isEmpty) marked
+    else outstandingDvFiles(tablePath,
+      listParquetFiles(new java.io.File(tablePath)))
+  }
+
+  private def outstandingDvFiles(tablePath: String,
+      live: Seq[java.io.File]): Set[String] =
+    dvMarkedFiles(tablePath).intersect(live.map(_.getName).toSet)
+
+  /** Every file name any vector version marks. */
+  private def dvMarkedFiles(tablePath: String): Set[String] =
     dvVersions(tablePath).iterator.flatMap { v =>
       Files.readString(Paths.get(dvMarkerPath(tablePath, v)))
         .linesIterator.filter(_.nonEmpty)
-    }.toSet.intersect(live)
-  }
+    }.toSet
 
-  private def requireNoOutstandingDvs(tablePath: String, op: String): Unit = {
-    val names = outstandingDvFiles(tablePath)
+  /** `live` is the caller's walk of the table under the commit lock. */
+  private def requireNoOutstandingDvs(tablePath: String,
+      live: Seq[java.io.File], op: String): Unit = {
+    val names = outstandingDvFiles(tablePath, live)
     if (names.nonEmpty) throw new IllegalStateException(
       s"$op on $tablePath refused: ${names.size} live files carry " +
         "unapplied deletion vectors and a raw-file rewrite would " +
         "resurrect their deleted rows — run applyDeleteVectors first")
   }
+
+  /** The parquet files of vector version `v`. */
+  private def dvFiles(tablePath: String, v: Long): Seq[java.io.File] =
+    Option(new java.io.File(dvDirPath(tablePath, v)).listFiles())
+      .getOrElse(Array.empty[java.io.File]).toSeq
+      .filter(f => f.getName.endsWith(".parquet") && f.isFile)
+
+  private val dvSchema = StructType(Seq(StructField("__dv_file", StringType),
+    StructField("__dv_pos", LongType)))
 
   /** All vectors at versions ≤ `upTo` (None = all), as a DataFrame of
     * (__dv_file, __dv_pos); None when there are none.
@@ -1971,7 +2109,8 @@ object Maintenance extends Logging {
       upTo: Option[Long]): Option[DataFrame] = {
     val vs = dvVersions(tablePath).filter(v => upTo.forall(v <= _))
     if (vs.isEmpty) None
-    else Some(spark.read.parquet(vs.map(dvDirPath(tablePath, _)): _*))
+    else Some(readFiles(spark, tablePath, vs.flatMap(dvFiles(tablePath, _)),
+      Some(dvSchema), None))
   }
 
   /** Anti-join `df` (a parquet file-source read) against vectors on
@@ -2005,18 +2144,13 @@ object Maintenance extends Logging {
   def dvPackedByFile(tablePath: String): Map[String, Array[Byte]] = {
     val perFile = new scala.collection.mutable.HashMap[String,
       scala.collection.mutable.ArrayBuffer[Long]]()
-    dvVersions(tablePath).foreach { v =>
-      Option(new java.io.File(dvDirPath(tablePath, v)).listFiles())
-        .getOrElse(Array.empty[java.io.File]).toSeq
-        .filter(f => f.getName.endsWith(".parquet") && f.isFile)
-        .foreach { f =>
-          ParquetData.readRows(Files.readAllBytes(f.toPath),
-            Seq("__dv_file", "__dv_pos")).foreach { r =>
-            perFile.getOrElseUpdate(String.valueOf(r(0)),
-              new scala.collection.mutable.ArrayBuffer[Long]()) +=
-              r(1).asInstanceOf[Long]
-          }
-        }
+    dvVersions(tablePath).flatMap(dvFiles(tablePath, _)).foreach { f =>
+      ParquetData.readRows(Files.readAllBytes(f.toPath),
+        Seq("__dv_file", "__dv_pos")).foreach { r =>
+        perFile.getOrElseUpdate(String.valueOf(r(0)),
+          new scala.collection.mutable.ArrayBuffer[Long]()) +=
+          r(1).asInstanceOf[Long]
+      }
     }
     perFile.iterator.map { case (f, buf) =>
       val sorted = buf.toArray
@@ -2096,8 +2230,7 @@ object Maintenance extends Logging {
       val total = live.size
       val schema = readTableSchema(tablePath)
       val delPred = coalesce(predicate, lit(false))
-      val base = schema.map(spark.read.schema).getOrElse(spark.read)
-        .parquet(tablePath)
+      val base = readFiles(spark, tablePath, live, schema, Some(tablePath))
         .withColumn("__dv_file",
           expr("substring_index(_metadata.file_path, '/', -1)"))
         .withColumn("__dv_pos", col("_metadata.row_index"))
@@ -2143,48 +2276,23 @@ object Maintenance extends Logging {
     */
   def applyDeleteVectors(spark: SparkSession, tablePath: String): Int =
     withCommitLock(tablePath, timeoutMs = 600000L) {
-      val names = outstandingDvFiles(tablePath).toSeq.sorted
+      val live = listParquetFiles(new java.io.File(tablePath))
+      val names = outstandingDvFiles(tablePath, live).toSeq.sorted
       if (names.isEmpty) 0
       else {
-        val root = Paths.get(tablePath)
-        val byName = listParquetFiles(new java.io.File(tablePath))
-          .map(f => f.getName -> f).toMap
-        val schema = readTableSchema(tablePath)
+        val byName = live.map(f => f.getName -> f).toMap
         val partCols = readPartitioning(tablePath)
-        val reader = {
-          val r = schema.map(spark.read.schema).getOrElse(spark.read)
-          if (partCols.nonEmpty) r.option("basePath", tablePath) else r
-        }
         val dv = dvEntries(spark, tablePath, None).get
-        val survivors = applyDv(
-          reader.parquet(names.map(byName(_).getAbsolutePath): _*), dv)
+        val survivors = applyDv(readFiles(spark, tablePath, names.map(byName),
+          readTableSchema(tablePath), basePathOf(tablePath, partCols)), dv)
         val stage = s"${tablePath}__stage/${java.util.UUID.randomUUID()}"
         val sw = survivors.write.mode(SaveMode.Overwrite)
         (if (partCols.nonEmpty) sw.partitionBy(partCols: _*) else sw)
           .parquet(stage)
         try {
           val v = readVersion(tablePath) + 1
-          names.foreach { name =>
-            val rel = root.relativize(byName(name).toPath).toString
-            val dest = Paths.get(removedPath(tablePath)).resolve(rel)
-            Files.createDirectories(dest.getParent)
-            Files.move(byName(name).toPath, dest,
-              StandardCopyOption.ATOMIC_MOVE)
-          }
-          val committed = moveStagedIn(tablePath, stage, "dvapply", v)
-          val gone = names.toSet
-          writeFileStats(tablePath,
-            readFileStats(tablePath).toSeq.collect {
-              case ((f, c), (l, h)) if !gone.contains(f) => (f, c, l, h)
-            }, append = false)
-          writeFileStats(tablePath,
-            footerStats(spark, committed.map(_.toFile)) ++
-              partitionStats(tablePath, committed), append = true)
-          val reg = Paths.get(liveFilesPath(tablePath))
-          if (Files.exists(reg)) recordLiveFiles(tablePath)
-          writeFileList(snapshotFullPath(tablePath, v),
-            listParquetFiles(new java.io.File(tablePath))
-              .map(f => root.relativize(f.toPath).toString))
+          quarantine(tablePath, names.map(byName))
+          commitRewrite(spark, tablePath, stage, "dvapply", v, names.toSet)
           writeVersion(tablePath, v)
           names.size
         } finally dropStage(stage)
@@ -2414,13 +2522,8 @@ object Maintenance extends Logging {
     Files.createDirectories(out.getParent)
     val files = listParquetFiles(new java.io.File(tablePath))
     if (files.isEmpty) { Files.writeString(out, ""); return }
-    val schema = readTableSchema(tablePath)
-    val partCols = readPartitioning(tablePath)
-    val reader = {
-      val r = schema.map(spark.read.schema).getOrElse(spark.read)
-      if (partCols.nonEmpty) r.option("basePath", tablePath) else r
-    }
-    val df = reader.parquet(files.map(_.getAbsolutePath): _*)
+    val df = readFiles(spark, tablePath, files, readTableSchema(tablePath),
+        basePathOf(tablePath, readPartitioning(tablePath)))
       .select(input_file_name().as("__f"), col(column).as("__v"))
     // pass 1 (column-pruned, counts only): the largest per-file
     // cardinality bound drives the shared sizing
@@ -2519,11 +2622,10 @@ object Maintenance extends Logging {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
     } else {
       val byName = listParquetFiles(new java.io.File(tablePath))
-        .map(f => f.getName -> f.getAbsolutePath).toMap
-      val reader = schema.map(spark.read.schema).getOrElse(spark.read)
+        .map(f => f.getName -> f).toMap
       applyColumnMap(tablePath, withDvApplied(spark, tablePath,
-        reader.option("basePath", tablePath)
-          .parquet(kept.flatMap(byName.get): _*))
+        readFiles(spark, tablePath, kept.flatMap(byName.get), schema,
+          Some(tablePath)))
         .filter(col(column) === lit(value)))
     }
   }
@@ -2570,9 +2672,10 @@ object Maintenance extends Logging {
       lo: Double, hi: Double): DeleteResult =
     withCommitLock(tablePath, timeoutMs = 600000L) {
       val column = toPhysical(tablePath, column0)
-      deleteCore(spark, tablePath,
+      val live = listParquetFiles(new java.io.File(tablePath))
+      deleteCore(spark, tablePath, live,
         col(column) >= lit(lo) && col(column) <= lit(hi),
-        Some(skippingPlan(tablePath, column, lo, hi)._1))
+        skippingPlan(tablePath, column, lo, hi, live))
     }
 
   /** DELETE with an arbitrary predicate — the general `DELETE FROM t
@@ -2588,50 +2691,39 @@ object Maintenance extends Logging {
   def deleteWhere(spark: SparkSession, tablePath: String,
       predicate: Column): DeleteResult =
     withCommitLock(tablePath, timeoutMs = 600000L) {
-      deleteCore(spark, tablePath,
-        toPhysicalPred(tablePath, predicate), None)
+      val live = listParquetFiles(new java.io.File(tablePath))
+      deleteCore(spark, tablePath, live,
+        toPhysicalPred(tablePath, predicate), live.sortBy(_.getName))
     }
 
-  /** Shared delete engine; caller holds the commit lock. `candidates`
-    * None = all live files.
+  /** Shared delete engine; caller holds the commit lock and walked the
+    * `live` files under it; `candidates` ⊆ `live`.
     */
   private def deleteCore(spark: SparkSession, tablePath: String,
-      predicate: Column, candidatesOpt: Option[Seq[String]]): DeleteResult = {
-      requireNoOutstandingDvs(tablePath, "rewrite-based delete")
-      val root = Paths.get(tablePath)
+      live: Seq[java.io.File], predicate: Column,
+      candidates: Seq[java.io.File]): DeleteResult = {
+      requireNoOutstandingDvs(tablePath, live, "rewrite-based delete")
       val v0 = readVersion(tablePath)
-      val byName = listParquetFiles(new java.io.File(tablePath))
-        .map(f => f.getName -> f).toMap
-      val candidates = candidatesOpt.getOrElse(byName.keys.toSeq.sorted)
+      val byName = live.map(f => f.getName -> f).toMap
       val total = byName.size
       val schema = readTableSchema(tablePath)
       val partCols = readPartitioning(tablePath)
-      // basePath keeps partition-dir columns resolvable when reading an
-      // explicit file list out of a partitioned layout
-      def reader = {
-        val r = schema.map(spark.read.schema).getOrElse(spark.read)
-        if (partCols.nonEmpty) r.option("basePath", tablePath) else r
-      }
+      def read(files: Seq[java.io.File]) = readFiles(spark, tablePath,
+        files, schema, basePathOf(tablePath, partCols))
       val delPred = coalesce(predicate, lit(false))
       // exact confirmation of the conservative stats prune: one metadata-
       // scale job over the candidate files counts matches per file; files
       // whose stats overlap but hold no matching row stay untouched
       val perFile: Array[(String, Long)] =
         if (candidates.isEmpty) Array.empty
-        else reader.parquet(candidates.map(byName(_).getAbsolutePath): _*)
-          .filter(delPred)
-          .groupBy(input_file_name().as("path")).count()
-          .collect()
-          .map(r => (Paths.get(new java.net.URI(r.getString(0)).getPath)
-            .getFileName.toString, r.getLong(1)))
+        else rowsPerFile(read(candidates).filter(delPred))
       if (perFile.isEmpty)
         DeleteResult(v0, 0L, 0, total)
       else {
         val affected = perFile.map(_._1).toSeq.sorted
         val rowsDeleted = perFile.map(_._2).sum
         val v = v0 + 1
-        val affPaths = affected.map(byName(_).getAbsolutePath)
-        val aff = reader.parquet(affPaths: _*)
+        val aff = read(affected.map(byName))
         // CDC change files (the deleted rows) — written BEFORE any
         // original moves, while the source paths are still live; sized
         // by the affected bytes (an upper bound on the deleted rows)
@@ -2649,32 +2741,10 @@ object Maintenance extends Logging {
         (if (partCols.nonEmpty) survW.partitionBy(partCols: _*) else survW)
           .parquet(stage)
         try {
-          // quarantine the originals (history, not garbage)
-          affected.foreach { name =>
-            val rel = root.relativize(byName(name).toPath).toString
-            val dest = Paths.get(removedPath(tablePath)).resolve(rel)
-            Files.createDirectories(dest.getParent)
-            Files.move(byName(name).toPath, dest,
-              StandardCopyOption.ATOMIC_MOVE)
-          }
-          val committed = moveStagedIn(tablePath, stage, "delete", v)
-          // stats: entries of quarantined files would pin dead names —
-          // drop them; the replacement files get fresh footer stats
-          val gone = affected.toSet
-          writeFileStats(tablePath,
-            readFileStats(tablePath).toSeq.collect {
-              case ((f, c), (l, h)) if !gone.contains(f) => (f, c, l, h)
-            }, append = false)
-          writeFileStats(tablePath,
-            footerStats(spark, committed.map(_.toFile)) ++
-              partitionStats(tablePath, committed), append = true)
-          val reg = Paths.get(liveFilesPath(tablePath))
-          if (Files.exists(reg)) recordLiveFiles(tablePath)
-          // snapshot: full listing (delete versions reconstruct directly)
-          // + the delete marker naming what left the live set
-          writeFileList(snapshotFullPath(tablePath, v),
-            listParquetFiles(new java.io.File(tablePath))
-              .map(f => root.relativize(f.toPath).toString))
+          quarantine(tablePath, affected.map(byName))
+          // the full listing reconstructs the version directly; the
+          // delete marker names what left the live set
+          commitRewrite(spark, tablePath, stage, "delete", v, affected.toSet)
           writeFileList(snapshotDeletePath(tablePath, v), affected)
           writeVersion(tablePath, v)
           DeleteResult(v, rowsDeleted, affected.size, total)
@@ -2707,7 +2777,8 @@ object Maintenance extends Logging {
   def updateWhere(spark: SparkSession, tablePath: String,
       predicate0: Column, set0: Map[String, Column]): UpdateResult =
     withCommitLock(tablePath, timeoutMs = 600000L) {
-      requireNoOutstandingDvs(tablePath, "updateWhere")
+      val live = listParquetFiles(new java.io.File(tablePath))
+      requireNoOutstandingDvs(tablePath, live, "updateWhere")
       // logical → physical at the boundary: SET targets by name, every
       // expression (predicate and right-hand sides) by attribute rewrite
       val predicate = toPhysicalPred(tablePath, predicate0)
@@ -2715,38 +2786,28 @@ object Maintenance extends Logging {
         toPhysical(tablePath, c) -> toPhysicalPred(tablePath, e)
       }
       require(set.nonEmpty, "updateWhere with an empty SET")
-      val root = Paths.get(tablePath)
       val v0 = readVersion(tablePath)
-      val byName = listParquetFiles(new java.io.File(tablePath))
-        .map(f => f.getName -> f).toMap
+      val byName = live.map(f => f.getName -> f).toMap
       val total = byName.size
       val schema = readTableSchema(tablePath)
       val partCols = readPartitioning(tablePath)
-      def reader = {
-        val r = schema.map(spark.read.schema).getOrElse(spark.read)
-        if (partCols.nonEmpty) r.option("basePath", tablePath) else r
-      }
+      def read(files: Seq[java.io.File]) = readFiles(spark, tablePath,
+        files, schema, basePathOf(tablePath, partCols))
       schema.foreach { sc =>
         val missing = set.keySet -- sc.fieldNames
         require(missing.isEmpty,
           s"updateWhere SET names columns $tablePath lacks: $missing")
       }
       val updPred = coalesce(predicate, lit(false))
-      val candidates = byName.keys.toSeq.sorted
       val perFile: Array[(String, Long)] =
-        if (candidates.isEmpty) Array.empty
-        else reader.parquet(candidates.map(byName(_).getAbsolutePath): _*)
-          .filter(updPred)
-          .groupBy(input_file_name().as("path")).count()
-          .collect()
-          .map(r => (Paths.get(new java.net.URI(r.getString(0)).getPath)
-            .getFileName.toString, r.getLong(1)))
+        if (live.isEmpty) Array.empty
+        else rowsPerFile(read(live.sortBy(_.getName)).filter(updPred))
       if (perFile.isEmpty) UpdateResult(v0, 0L, 0, total)
       else {
         val affected = perFile.map(_._1).toSeq.sorted
         val rowsUpdated = perFile.map(_._2).sum
         val v = v0 + 1
-        val aff = reader.parquet(affected.map(byName(_).getAbsolutePath): _*)
+        val aff = read(affected.map(byName))
         def applySet(df: DataFrame) =
           set.foldLeft(df) { case (d, (c, e)) => d.withColumn(c, e) }
         // typed CDC — written BEFORE any original moves
@@ -2775,27 +2836,8 @@ object Maintenance extends Logging {
           () => spark.read.parquet(stage), s"update(v=$v)",
           cleanup = () => deleteRecursively(new java.io.File(stage)))
         try {
-          affected.foreach { name =>
-            val rel = root.relativize(byName(name).toPath).toString
-            val dest = Paths.get(removedPath(tablePath)).resolve(rel)
-            Files.createDirectories(dest.getParent)
-            Files.move(byName(name).toPath, dest,
-              StandardCopyOption.ATOMIC_MOVE)
-          }
-          val committed = moveStagedIn(tablePath, stage, "update", v)
-          val gone = affected.toSet
-          writeFileStats(tablePath,
-            readFileStats(tablePath).toSeq.collect {
-              case ((f, c), (l, h)) if !gone.contains(f) => (f, c, l, h)
-            }, append = false)
-          writeFileStats(tablePath,
-            footerStats(spark, committed.map(_.toFile)) ++
-              partitionStats(tablePath, committed), append = true)
-          val reg = Paths.get(liveFilesPath(tablePath))
-          if (Files.exists(reg)) recordLiveFiles(tablePath)
-          writeFileList(snapshotFullPath(tablePath, v),
-            listParquetFiles(new java.io.File(tablePath))
-              .map(f => root.relativize(f.toPath).toString))
+          quarantine(tablePath, affected.map(byName))
+          commitRewrite(spark, tablePath, stage, "update", v, affected.toSet)
           writeFileList(snapshotUpdatePath(tablePath, v), affected)
           writeVersion(tablePath, v)
           UpdateResult(v, rowsUpdated, affected.size, total)
@@ -2843,19 +2885,17 @@ object Maintenance extends Logging {
   def mergeInto(spark: SparkSession, tablePath: String, source0: DataFrame,
       key0: String, autoMergeSchema: Boolean = false): MergeResult =
     withCommitLock(tablePath, timeoutMs = 600000L) {
-      requireNoOutstandingDvs(tablePath, "mergeInto")
+      val live = listParquetFiles(new java.io.File(tablePath))
+      requireNoOutstandingDvs(tablePath, live, "mergeInto")
       // the source arrives LOGICALLY named (it is caller data): translate
       // to physical so the join/rewrite/CDC all speak file terms
       val source = toPhysicalDf(tablePath, source0)
       val key = toPhysical(tablePath, key0)
-      val root = Paths.get(tablePath)
       val v0 = readVersion(tablePath)
       val schema = readTableSchema(tablePath)
       val partCols = readPartitioning(tablePath)
-      def reader = {
-        val r = schema.map(spark.read.schema).getOrElse(spark.read)
-        if (partCols.nonEmpty) r.option("basePath", tablePath) else r
-      }
+      def read(files: Seq[java.io.File]) = readFiles(spark, tablePath,
+        files, schema, basePathOf(tablePath, partCols))
       // stage the source once: it feeds key-range bounds, three joins,
       // and the change files — and must not be recomputed between them
       val src = source.localCheckpoint()
@@ -2864,8 +2904,8 @@ object Maintenance extends Logging {
       // extend the table schema (nullable) Delta-autoMerge style
       val tableFields: Seq[org.apache.spark.sql.types.StructField] =
         schema.map(_.fields.toSeq).getOrElse {
-          if (listParquetFiles(new java.io.File(tablePath)).nonEmpty)
-            spark.read.parquet(tablePath).schema.fields.toSeq
+          if (live.nonEmpty) readFiles(spark, tablePath, live, None,
+            Some(tablePath)).schema.fields.toSeq
           else src.schema.fields.toSeq
         }
       src.schema.fields.foreach { f =>
@@ -2908,25 +2948,20 @@ object Maintenance extends Logging {
         s"mergeInto source has duplicate '$key' values — a target row " +
           "matching several source rows is ambiguous (Delta MERGE error)")
       val keyMm = srcMeta
-      val total = listParquetFiles(new java.io.File(tablePath)).size
+      val total = live.size
       if (nSrc == 0) MergeResult(v0, 0L, 0L, 0, total)
       else {
-        val (candidates, _) =
-          skippingPlan(tablePath, key, keyMm.getDouble(3), keyMm.getDouble(4))
-        val byName = listParquetFiles(new java.io.File(tablePath))
-          .map(f => f.getName -> f).toMap
+        val candidates = skippingPlan(tablePath, key, keyMm.getDouble(3),
+          keyMm.getDouble(4), live)
+        val byName = live.map(f => f.getName -> f).toMap
         val srcKeys = src.select(col(key))
         val cand =
-          if (candidates.isEmpty) None
-          else Some(reader.parquet(
-            candidates.map(byName(_).getAbsolutePath): _*))
+          if (candidates.isEmpty) None else Some(read(candidates))
         // exact per-file matched-row counts: candidate scan × broadcast
         // source keys, one metadata-scale job
-        val perFile: Array[(String, Long)] = cand.map(
-          _.join(broadcast(srcKeys), Seq(key))
-            .groupBy(input_file_name().as("path")).count().collect()
-            .map(r => (Paths.get(new java.net.URI(r.getString(0)).getPath)
-              .getFileName.toString, r.getLong(1)))).getOrElse(Array.empty)
+        val perFile: Array[(String, Long)] = cand.map(c =>
+          rowsPerFile(c.join(broadcast(srcKeys), Seq(key))))
+          .getOrElse(Array.empty)
         val affected = perFile.map(_._1).toSeq.sorted
         val rowsUpdated = perFile.map(_._2).sum
         // keys present in ANY candidate file are the matched set; keys in
@@ -2943,9 +2978,7 @@ object Maintenance extends Logging {
         else {
           val v = v0 + 1
           val aff =
-            if (affected.isEmpty) None
-            else Some(reader.parquet(
-              affected.map(byName(_).getAbsolutePath): _*))
+            if (affected.isEmpty) None else Some(read(affected.map(byName)))
           // per matched target ROW, the source replacement (duplicate
           // target keys stay duplicated — Delta updates each matched row)
           val attrs = src.columns.filterNot(_ == key).toSeq
@@ -3002,27 +3035,8 @@ object Maintenance extends Logging {
             () => spark.read.parquet(stage), s"merge(v=$v)",
             cleanup = () => deleteRecursively(new java.io.File(stage)))
           try {
-            affected.foreach { name =>
-              val rel = root.relativize(byName(name).toPath).toString
-              val dest = Paths.get(removedPath(tablePath)).resolve(rel)
-              Files.createDirectories(dest.getParent)
-              Files.move(byName(name).toPath, dest,
-                StandardCopyOption.ATOMIC_MOVE)
-            }
-            val committed = moveStagedIn(tablePath, stage, "merge", v)
-            val gone = affected.toSet
-            writeFileStats(tablePath,
-              readFileStats(tablePath).toSeq.collect {
-                case ((f, c), (l, h)) if !gone.contains(f) => (f, c, l, h)
-              }, append = false)
-            writeFileStats(tablePath,
-              footerStats(spark, committed.map(_.toFile)) ++
-                partitionStats(tablePath, committed), append = true)
-            val reg = Paths.get(liveFilesPath(tablePath))
-            if (Files.exists(reg)) recordLiveFiles(tablePath)
-            writeFileList(snapshotFullPath(tablePath, v),
-              listParquetFiles(new java.io.File(tablePath))
-                .map(f => root.relativize(f.toPath).toString))
+            quarantine(tablePath, affected.map(byName))
+            commitRewrite(spark, tablePath, stage, "merge", v, affected.toSet)
             writeFileList(snapshotMergePath(tablePath, v), affected)
             // the tracked schema evolves WITH the commit (readers of old
             // versions get nulls for the new nullable columns)
@@ -3087,23 +3101,15 @@ object Maintenance extends Logging {
       // reads its candidate subset RAW (unlike the whole-table rewrites,
       // which go through the DV-aware readTable and so materialize
       // vectors as they compact)
-      requireNoOutstandingDvs(tablePath, "compactWhere")
-      val column = toPhysical(tablePath, column0)
-      val root = Paths.get(tablePath)
-      val (candidates, _) = skippingPlan(tablePath, column, lo, hi)
+      val live = listParquetFiles(new java.io.File(tablePath))
+      requireNoOutstandingDvs(tablePath, live, "compactWhere")
+      val candidates = skippingPlan(tablePath, column0, lo, hi, live)
       if (candidates.size <= targetFiles) 0
       else {
-        val byName = listParquetFiles(new java.io.File(tablePath))
-          .map(f => f.getName -> f).toMap
-        val schema = readTableSchema(tablePath)
         val partCols = readPartitioning(tablePath)
-        val readerB = {
-          val r = schema.map(spark.read.schema).getOrElse(spark.read)
-          if (partCols.nonEmpty) r.option("basePath", tablePath) else r
-        }
         val stage = s"${tablePath}__stage/${java.util.UUID.randomUUID()}"
-        val cw = readerB
-          .parquet(candidates.map(byName(_).getAbsolutePath): _*)
+        val cw = readFiles(spark, tablePath, candidates,
+            readTableSchema(tablePath), basePathOf(tablePath, partCols))
           .coalesce(targetFiles)
           .write.mode(SaveMode.Overwrite)
         (if (partCols.nonEmpty) cw.partitionBy(partCols: _*) else cw)
@@ -3112,21 +3118,9 @@ object Maintenance extends Logging {
           val v = readVersion(tablePath) + 1
           // a rewrite physically reclaims its inputs (same contract as
           // whole-table compact — history before it reads loudly-missing)
-          candidates.foreach(n => Files.delete(byName(n).toPath))
-          val committed = moveStagedIn(tablePath, stage, "compactw", v)
-          val gone = candidates.toSet
-          writeFileStats(tablePath,
-            readFileStats(tablePath).toSeq.collect {
-              case ((f, c), (l, h)) if !gone.contains(f) => (f, c, l, h)
-            }, append = false)
-          writeFileStats(tablePath,
-            footerStats(spark, committed.map(_.toFile)) ++
-              partitionStats(tablePath, committed), append = true)
-          val reg = Paths.get(liveFilesPath(tablePath))
-          if (Files.exists(reg)) recordLiveFiles(tablePath)
-          writeFileList(snapshotFullPath(tablePath, v),
-            listParquetFiles(new java.io.File(tablePath))
-              .map(f => root.relativize(f.toPath).toString))
+          candidates.foreach(f => Files.delete(f.toPath))
+          commitRewrite(spark, tablePath, stage, "compactw", v,
+            candidates.map(_.getName).toSet)
           writeVersion(tablePath, v)
           candidates.size
         } finally dropStage(stage)
